@@ -622,6 +622,10 @@ def rp_candidate_pairs(
     Zero-norm vectors have no direction and are dropped (same contract
     as the previous MLlib path, which dropped them before the fit).
     """
+    if n_tables < 1:
+        # sequence(0, n_tables - 1) counts DOWN for n_tables == 0 and
+        # would emit bands j=0 and j=-1; fail loudly instead.
+        raise ValueError(f"n_tables must be >= 1, got {n_tables}")
     sig = rp_signatures(
         corpus,
         id_col=id_col,

@@ -116,7 +116,9 @@ def grouped_value_cumsum(
     # pathological if a caller passes a tiny bucket_width against a
     # wide domain. Guard the assumption at runtime: any group
     # exceeding _MAX_BUCKETS buckets fails loudly instead of
-    # silently going quadratic.
+    # silently going quadratic. The guard wraps the totals AND the
+    # O(B^2) offsets: a consumer that selects only ``cum`` prunes the
+    # totals away, and with them any guard placed only there.
     guard = F.when(
         F.size("_bl") > _MAX_BUCKETS,
         F.raise_error(
@@ -149,10 +151,12 @@ def grouped_value_cumsum(
         group,
         F.col("_e._b").alias("_b"),
         *[
-            F.aggregate(
-                F.slice("_bl", F.lit(1), F.col("_i")),
-                zero,
-                lambda a, e: a + e[f"_mass_{w}"],
+            guard.otherwise(
+                F.aggregate(
+                    F.slice("_bl", F.lit(1), F.col("_i")),
+                    zero,
+                    lambda a, e: a + e[f"_mass_{w}"],
+                )
             ).alias(f"_off_{w}")
             for w in ws
         ],

@@ -1177,7 +1177,10 @@ def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     total without ever re-referencing the basket subtree. ppm
     divisions keep the exact r14 float spellings (same IEEE op
     order); interleaved A/B and 2-SF value identity in the round
-    log."""
+    log. The order total counts orders with at least one line that
+    joins to part; that is every order only under the l_partkey ->
+    part foreign key, which tests/test_catalog.py checks on the
+    corpora."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
     g = (

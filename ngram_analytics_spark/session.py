@@ -9,8 +9,12 @@ Scale design notes (100 TB):
 - ``spark.sql.shuffle.partitions`` is a local-mode default only; on a
   real cluster AQE's coalescing makes the static value far less
   critical, and per-job overrides are the tuning point.
-- Session timezone pinned to UTC so date/time functions are
-  deterministic and match the DuckDB oracle.
+- The catalog's session confs (``catalog.SESSION_CONF``: time zone
+  pinned to UTC so date/time functions are deterministic and match the
+  DuckDB oracle; parquet TIMESTAMP(NANOS) surfaced as long) are set at
+  build time, so no query sets them per call.
+- The driver heap defaults to half the host's memory (``MemTotal``),
+  at most 48g; ``SPARK_DRIVER_MEMORY`` overrides it.
 """
 
 from __future__ import annotations
@@ -19,7 +23,30 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ngram_analytics_spark.catalog import SESSION_CONF
+
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of ``MemTotal``, at most 48g; 4g where it cannot be read.
+
+    local[N] runs executors inside the driver JVM: the "driver" heap is
+    really N executor threads' working memory. At 16g a long session
+    degrades 2x from GC pressure (measured: the 18-query bench
+    31.9s@16g -> 19.8s@48g on a 128 GiB box), so size it like an
+    executor, not like a cluster driver — but leave the other half of
+    the host to the Python workers and the OS.
+    """
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1024, min(48 * 1024, kib // 2048))}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "4g"
 
 
 def get_spark(
@@ -41,19 +68,15 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # local[N] runs executors inside the driver JVM: the "driver"
-        # heap is really N executor threads' working memory. At 16g a
-        # long session degrades 2x from GC pressure (measured: the 18-
-        # query bench 31.9s@16g -> 19.8s@48g on a 128 GiB box); size it
-        # like an executor, not like a cluster driver.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**SESSION_CONF, **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

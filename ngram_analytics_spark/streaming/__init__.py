@@ -14,41 +14,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+from ngram_analytics_spark import catalog
 
 
-#: legacy driver layout: TIMESTAMP(NANOS) surfaced as long
-EVENTS_RAW_SCHEMA = _events_schema(T.LongType())
-#: standard layout: TIMESTAMP(MICROS) reads natively
-EVENTS_TS_SCHEMA = _events_schema(T.TimestampType())
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (same layout-adaptive
-    timestamp normalization as catalog.load).
+def _stage(sf_dir: str, name: str, prefix: str) -> str:
+    """Scratch directory of symlinks to table ``name``'s data files.
 
     Spark's file stream source requires a *directory*; the testdata dir
-    mixes all tables, so stage a scratch dir holding a symlink to the
-    single events file (read-only testdata is never touched).
-
-    ``readStream`` needs an explicit schema, and the driver has shipped
-    the events table in two layouts across rounds — TIMESTAMP(NANOS)
-    (which Spark surfaces as long under the legacy conf) and plain
-    TIMESTAMP(MICROS). Probe the file's batch schema (footer-only, no
-    data scan) and pick the matching stream schema; applying the ns->us
-    division to a micros column would shift every event to 1970.
+    mixes all tables, so stage a scratch dir holding a symlink to each
+    data file (read-only testdata is never touched). The generated
+    corpora ship a table as a single FILE; a Spark-written table is a
+    DIRECTORY of part files the file source won't recurse into through
+    one symlink, so those are staged individually.
     """
     import hashlib
     import os
@@ -57,17 +35,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # abspath: a relative sf_dir would otherwise create a symlink that
     # resolves relative to the scratch dir (broken), and the broken
     # link fails os.path.exists yet still collides on re-create.
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    src = os.path.abspath(catalog.table_path(sf_dir, name))
     tag = hashlib.sha1(src.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"nas-stream-{tag}")
+    stage = os.path.join(tempfile.gettempdir(), f"{prefix}-{tag}")
     os.makedirs(stage, exist_ok=True)
-    # single-FILE driver layout vs Spark-written DIRECTORY of part
-    # files (fixture corpora) — stage data files individually for the
-    # latter, the read_documents_stream discipline (r11)
     if os.path.isdir(src):
-        # drop the pre-r11 single symlink named after the source
-        # DIRECTORY — inert today (the file source ignores directory
-        # links) but a recursion/listing change would double-read it
+        # drop a single symlink named after the source DIRECTORY (an
+        # older staging layout) — inert today (the file source ignores
+        # directory links) but a recursion/listing change would
+        # double-read it
         legacy = os.path.join(stage, os.path.basename(src))
         if os.path.lexists(legacy):
             os.remove(legacy)
@@ -84,55 +60,28 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.remove(link)
         if not os.path.lexists(link):
             os.symlink(p, link)
+    return stage
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_is_long = dict(spark.read.parquet(src).dtypes).get("ts") == "bigint"
-    if ts_is_long:
-        return (
-            spark.readStream.schema(EVENTS_RAW_SCHEMA)
-            .parquet(stage)
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        )
-    return spark.readStream.schema(EVENTS_TS_SCHEMA).parquet(stage)
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events parquet.
+
+    ``readStream`` needs an explicit schema, and the events table
+    exists in two layouts — TIMESTAMP(NANOS) (surfaced as long) and
+    TIMESTAMP(MICROS). The catalog owns that decision: the
+    stream takes the table's cached stored schema and the same ``ts``
+    normalization as ``catalog.load`` (applying the ns->us division to
+    a micros column would shift every event to 1970).
+    """
+    stage = _stage(sf_dir, "events", "nas-stream")
+    return catalog.read_stream(spark, sf_dir, "events", stage)
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents parquet (the streaming
-    twin of catalog.load("documents")): same symlink-staging trick as
-    read_events_stream — the file source needs a directory and the
-    testdata dir mixes all tables. Documents carry no timestamps, so
-    no layout probing is needed."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.sha1(src.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"nas-docstream-{tag}")
-    os.makedirs(stage, exist_ok=True)
-    # the driver corpus ships documents.parquet as a single FILE; a
-    # Spark-written table is a DIRECTORY of part files the file
-    # source won't recurse into through one symlink — stage each
-    # data file individually in that case (r11: unblocks streaming
-    # queries over fixture corpora)
-    if os.path.isdir(src):
-        # see read_events_stream: clear the pre-r11 directory symlink
-        legacy = os.path.join(stage, os.path.basename(src))
-        if os.path.lexists(legacy):
-            os.remove(legacy)
-        parts = [
-            os.path.join(src, fn)
-            for fn in sorted(os.listdir(src))
-            if fn.endswith(".parquet")
-        ]
-    else:
-        parts = [src]
-    for p in parts:
-        link = os.path.join(stage, os.path.basename(p))
-        if os.path.lexists(link) and os.path.realpath(link) != p:
-            os.remove(link)
-        if not os.path.lexists(link):
-            os.symlink(p, link)
+    twin of catalog.load("documents")). Documents carry no timestamps,
+    so the stream schema is fixed."""
+    stage = _stage(sf_dir, "documents", "nas-docstream")
     schema = (
         "doc_id long, text string, lang string, source string,"
         " n_chars long"

@@ -1523,3 +1523,18 @@ def test_rp_banding_excludes_off_dim_vectors(spark):
     got = rp_candidate_pairs(mixed).collect()
     for r in got:
         assert r.id_a >= 100 and r.id_b >= 100
+
+
+def test_rp_candidate_pairs_rejects_zero_tables(spark):
+    """n_tables == 0 would make sequence(0, n_tables - 1) count down
+    and emit bands j=0 and j=-1; it must fail loudly instead."""
+    from ngram_analytics_spark.operators.similarity import (
+        rp_candidate_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0] * 64), (2, [1.0] * 64)], "vec_id long, embedding array<float>"
+    )
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="n_tables"):
+            rp_candidate_pairs(df, n_tables=bad)

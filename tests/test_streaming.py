@@ -129,9 +129,10 @@ def test_transform_with_state_running_max(spark):
 
 def test_read_events_stream_adapts_to_both_ts_layouts(spark, tmp_path):
     """The driver has shipped events.ts as TIMESTAMP(NANOS) (surfaced
-    long) and as TIMESTAMP(MICROS); the stream reader must normalize
-    both to the same instants. Synthesize a tiny events file in each
-    layout and pin the decoded timestamps."""
+    long) and as TIMESTAMP(MICROS); the batch loader and the stream
+    reader must both normalize them to ``timestamp`` and the same
+    instants. Synthesize a tiny events file in each layout and pin the
+    decoded timestamps."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -156,19 +157,21 @@ def test_read_events_stream_adapts_to_both_ts_layouts(spark, tmp_path):
             ),
             sf_dir / "events.parquet",
         )
+        want = {1: "2024-01-01 00:00:00", 2: "2024-01-01 00:01:00"}
+        batch = load(spark, str(sf_dir), "events")
         stream = S.read_events_stream(spark, str(sf_dir))
+        assert dict(batch.dtypes)["ts"] == "timestamp"
+        assert dict(stream.dtypes)["ts"] == "timestamp"
         name = f"t_layout_{unit}"
         S.run_to_memory(
             stream.select("event_id", "ts"), name, output_mode="append"
         )
-        rows = {
-            r.event_id: r.ts.strftime("%Y-%m-%d %H:%M:%S")
-            for r in spark.table(name).collect()
-        }
-        assert rows == {
-            1: "2024-01-01 00:00:00",
-            2: "2024-01-01 00:01:00",
-        }, f"layout {unit}: {rows}"
+        for kind, got in (("batch", batch), ("stream", spark.table(name))):
+            rows = {
+                r.event_id: r.ts.strftime("%Y-%m-%d %H:%M:%S")
+                for r in got.collect()
+            }
+            assert rows == want, f"layout {unit}, {kind}: {rows}"
 
 
 def test_lww_state_invariant_to_batch_splits(spark, tmp_path):

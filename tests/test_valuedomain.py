@@ -173,3 +173,20 @@ def test_value_cumsum_bucket_count_guard(spark):
         assert grouped_value_cumsum(df, "g", "v", "w", 0.5).count() == 50
     finally:
         vd._MAX_BUCKETS = old
+
+
+def test_value_cumsum_guard_survives_pruning_to_cum(spark):
+    """A consumer that selects only ``cum`` prunes the totals; the
+    bucket-count guard must still fire on the O(B^2) offsets."""
+    import ngram_analytics_spark.operators.valuedomain as vd
+
+    rows = [("g", float(v), 1) for v in range(50)]
+    df = spark.createDataFrame(rows, ["g", "v", "w"])
+    old = vd._MAX_BUCKETS
+    vd._MAX_BUCKETS = 10
+    try:
+        out = grouped_value_cumsum(df, "g", "v", "w", 0.5).select("cum")
+        with pytest.raises(Exception, match="bucket count exceeds"):
+            out.collect()
+    finally:
+        vd._MAX_BUCKETS = old
