@@ -1,6 +1,7 @@
 """Operator library: reusable, scale-designed dataflow operators."""
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from ngram_analytics_spark.operators.ngram import ngram, ngram_col, ngrams_sql
 
@@ -23,4 +24,21 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     return df
 
 
-__all__ = ["ngram", "ngram_col", "ngrams_sql", "spread"]
+def combo_pairs(col: Column) -> Column:
+    """All unordered (a, b) pairs of a SORTED array as structs, via the
+    indexed combinations lambda (the q_dedup_containment shape): for
+    element i, pair with every later element. Quadratic only in the
+    array length the caller has already bounded (band cap / emitted
+    clone pairs)."""
+    return F.flatten(
+        F.transform(
+            col,
+            lambda a, i: F.transform(
+                F.slice(col, i + 2, F.size(col)),
+                lambda b: F.struct(a.alias("a"), b.alias("b")),
+            ),
+        )
+    )
+
+
+__all__ = ["combo_pairs", "ngram", "ngram_col", "ngrams_sql", "spread"]

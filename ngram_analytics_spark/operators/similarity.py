@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ngram_analytics_spark.functions.deterministic import round4det
+from ngram_analytics_spark.operators import combo_pairs
 from ngram_analytics_spark.functions.vectors import (
     cosine_from_parts,
     dot,
@@ -500,20 +501,6 @@ def rp_signs(n_proj: int, dim: int, seed: int) -> list[list[float]]:
     ]
 
 
-def _combo_pairs(col):
-    """(a, b) structs for every a < b in a SORTED array column —
-    indexed combinations lambda (the q_dedup_containment shape)."""
-    return F.flatten(
-        F.transform(
-            col,
-            lambda a, i: F.transform(
-                F.slice(col, i + 2, F.size(col)),
-                lambda b: F.struct(a.alias("a"), b.alias("b")),
-            ),
-        )
-    )
-
-
 def rp_signatures(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -600,8 +587,8 @@ def rp_candidate_pairs(
     """Candidate (id_a < id_b) pairs from deterministic random-
     projection banding with BOUNDED fanout — the candidate stage of
     :func:`rp_banded_edges`, factored out so property tests can probe
-    the fanout bound directly (the _mh_candidate_pairs discipline,
-    queries/llm_q.py).
+    the fanout bound directly (the minhash_candidate_pairs discipline,
+    operators/dedup.py).
 
     Stages (all DataFrame ops, one groupBy per stage):
 
@@ -642,7 +629,7 @@ def rp_candidate_pairs(
     )
     intra = (
         grp.filter(F.size("members") >= 2)
-        .select(F.explode(_combo_pairs(F.col("members"))).alias("p"))
+        .select(F.explode(combo_pairs(F.col("members"))).alias("p"))
         .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
     )
     # one sequence-HOF expression instead of a Python loop of 24
@@ -658,7 +645,7 @@ def rp_candidate_pairs(
         f" x -> cast(x AS string)), '_') AS bk))"
     )
     # Band rows carry the MEMBERS array alongside the gid (r14, the
-    # _mh_candidate_pairs fix): the old shape banded bare gids and
+    # minhash_candidate_pairs fix): the old shape banded bare gids and
     # joined grp's exploded membership back TWICE — a third grp
     # reference whose subtree re-ran the whole 48-projection
     # signature kernel (the "LSH grp 3 consumers" recompute a lazy
@@ -690,7 +677,7 @@ def rp_candidate_pairs(
                 F.collect_list(F.struct(F.col("gid"), F.col("members")))
             ).alias("gs")
         )
-        .select(F.explode(_combo_pairs(F.col("gs"))).alias("p"))
+        .select(F.explode(combo_pairs(F.col("gs"))).alias("p"))
         .select(
             F.col("p.a.gid").alias("ga"),
             F.col("p.b.gid").alias("gb"),

@@ -23,9 +23,22 @@ from ngram_analytics_spark.functions.vectors import (
     oracle_cosine,
     oracle_l2_norm,
 )
+from ngram_analytics_spark.operators import combo_pairs
 from ngram_analytics_spark.operators.dedup import (
+    _MH_BAND_CAP,
+    _MH_BANDS,
+    _MH_K,
+    _MH_MIN_J,
+    _mh_band_case_sql,
+    _mh_shingles_sql,
+    _mh_sql,
     exact_dedup,
+    minhash_index_probe,
+    minhash_index_write,
     minhash_lsh_candidates,
+    minhash_near_dup_pairs,
+    minhash_shingles,
+    minhash_signatures,
     ngram_jaccard_pairs,
     simhash_signatures,
 )
@@ -1869,198 +1882,13 @@ def q_ml_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- certified MinHash-LSH
 
-#: MinHash signature length / banding: K=8 hash functions in 4 bands of
-#: 2 rows — candidate probability 1-(1-s^2)^4 (~0.68 at s=0.5); the
-#: exact-Jaccard recheck then prunes to >= _MH_MIN_J. The hash family is
-#: h_i(x) = int32(md5(i || ':' || x)[:8]) — md5 is bit-identical in
-#: Spark and DuckDB, which is the whole point: unlike MLlib's private
-#: (a*h+b) mod p family (q_dedup_fuzzy, rows-only), every stage of THIS
-#: pipeline — signatures, band keys, candidate set, recheck — is
-#: SQL-certifiable (the q_text_tfidf_exact discipline applied to the
-#: largest remaining rows-only component, VERDICT r5 item 8).
-_MH_K = 8
-_MH_BANDS = 4
-_MH_MIN_J = 0.5
-_MH_N = 3  # word-trigram shingles
-
-
-def _mh_spark(i: int) -> "F.Column":
-    """min-hash i as a Spark column over exploded shingle column `sh`.
-
-    One md5 digest is 128 bits = FOUR independent 32-bit hash values
-    (hex chars 1-8 / 9-16 / 17-24 / 25-32), so K=8 functions cost two
-    digests per shingle, not eight — measured 4.26 -> 1.9 s at sf0.1.
-
-    The hex->int parse happens AFTER the min, once per (doc, i), not
-    per shingle (r15, VERDICT r14 item 5): md5 hex is fixed-width
-    lowercase, so binary string order on the 8-char chunk is exactly
-    numeric order — min(conv(h)) == conv(min(h)), property-tested in
-    tests/test_properties.py. The aggregation state is an 8-byte
-    string instead of a long; the 8 per-row conv parses disappear."""
-    seed, chunk = divmod(i, 4)
-    h8 = F.substring(
-        F.md5(F.concat(F.lit(f"{seed}:"), F.col("sh"))), 1 + 8 * chunk, 8
-    )
-    return F.conv(F.min(h8), 16, 10).cast("long").alias(f"m{i}")
-
-
-def _mh_sql(i: int) -> str:
-    """The identical min-hash in DuckDB SQL (hex via '0x' cast)."""
-    seed, chunk = divmod(i, 4)
-    return (
-        f"min(CAST('0x' || substring(md5('{seed}:' || sh),"
-        f" {1 + 8 * chunk}, 8) AS BIGINT)) AS m{i}"
-    )
-
-
-def _pairs_lambda(col: "F.Column") -> "F.Column":
-    """All unordered (a, b) pairs of a SORTED array as structs, via the
-    indexed combinations lambda (the q_dedup_containment shape): for
-    element i, pair with every later element. Quadratic only in the
-    array length the caller has already bounded (band cap / emitted
-    clone pairs)."""
-    return F.flatten(
-        F.transform(
-            col,
-            lambda a, i: F.transform(
-                F.slice(col, i + 2, F.size(col)),
-                lambda b: F.struct(a.alias("a"), b.alias("b")),
-            ),
-        )
-    )
-
-
-#: fingerprint columns a signature frame may carry through the
-#: candidate stage (order-independent (sum, xor, count) of the seed-0
-#: shingle hashes — equal fingerprints == equal shingle SETS at
-#: md5-class collision odds, the identity assumption every hash-keyed
-#: dedup op here already makes).
-_MH_FP = ("sds", "sdx", "n_sh")
-
-
-def _mh_candidate_pairs(sig: DataFrame) -> DataFrame:
-    """Banded candidate pairs from a MinHash signature frame (doc_id,
-    m0..m{K-1} [+ the _MH_FP fingerprint columns]) with BOUNDED
-    fanout: identical signatures collapse to one group before
-    banding; cross-group candidates come from per-band sorted
-    group-sets under the _MH_BAND_CAP cardinality cap. Emits
-    (id_a, id_b, n_bands) — plus both endpoints' fingerprints
-    (sds/sdx/n_sh suffixed _a / _b) when sig carries them, riding the membership
-    structs so NO post-hoc per-doc join is ever needed (r10 fact-skew
-    fix). Factored out of q_dedup_minhash_exact so the clone-cluster
-    property test can probe the candidate stage directly."""
-    sig_keys = [f"m{i}" for i in range(_MH_K)]
-    fp = [c for c in _MH_FP if c in sig.columns]
-    member_struct = F.struct(F.col("doc_id"), *[F.col(c) for c in fp])
-    grp = sig.groupBy(*sig_keys).agg(
-        F.min("doc_id").alias("gid"),
-        # doc_id leads the struct and is unique, so the sort order is
-        # exactly the old sorted-id order
-        F.sort_array(F.collect_list(member_struct)).alias("members"),
-    )
-
-    def _endpoint(side: F.Column, suffix: str, id_alias: str):
-        cols = [side.getField("doc_id").alias(id_alias)]
-        cols += [side.getField(c).alias(f"{c}{suffix}") for c in fp]
-        return cols
-
-    # intra-group pairs: every band collides by construction
-    intra = (
-        grp.filter(F.size("members") >= 2)
-        .select(F.explode(_pairs_lambda(F.col("members"))).alias("p"))
-        .select(
-            *_endpoint(F.col("p.a"), "_a", "id_a"),
-            *_endpoint(F.col("p.b"), "_b", "id_b"),
-            F.lit(_MH_BANDS).cast("long").alias("n_bands"),
-        )
-    )
-    # Band rows carry the MEMBERS array alongside the gid (r14): the
-    # old shape banded bare gids and then joined grp's exploded
-    # membership back TWICE to expand group pairs to doc pairs —
-    # a third reference to grp whose subtree re-ran the whole
-    # scan+shingle+md5 signature kernel, plus two candidate-keyed
-    # join shuffles. Riding the membership structs through the band
-    # explode (the r10 fingerprint discipline, extended to the
-    # member LIST) leaves grp referenced twice (intra + bands) and
-    # expands cross pairs in-array. Values are untouched: a group
-    # emits one row per (bj, bk), so collect_list == collect_set on
-    # gid; the struct sort leads with the unique gid, so pair order
-    # and the (ga, gb) band count are the old ones; first() on the
-    # carried member arrays is deterministic because every row of a
-    # (ga, gb) group carries the same two arrays.
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("bj"),
-            F.concat_ws("_", f"m{2 * j}", f"m{2 * j + 1}").alias("bk"),
-        )
-        for j in range(_MH_BANDS)
-    ]
-    bands = grp.select(
-        "gid", "members", F.explode(F.array(*band_structs)).alias("b")
-    ).select("gid", "members", "b.bj", "b.bk")
-    # Band-cap cut BEFORE the members-carrying collect (r15, VERDICT
-    # r14 item 2): a count window over the SAME (bj, bk) key — one
-    # row per group per cell, so the count equals the old size(gs) —
-    # drops degenerate cells while their rows sit in WindowExec's
-    # spillable buffer, instead of after collect_list buffered a
-    # cap-violating list of (gid, members) structs in ONE
-    # aggregation-buffer row (the 100 TB hot-band OOM/giant-row
-    # hazard). Window and groupBy share one (bj, bk) exchange.
-    ncell = F.count(F.lit(1)).over(W.partitionBy("bj", "bk"))
-    gp = (
-        bands.withColumn("_n", ncell)
-        .filter((F.col("_n") >= 2) & (F.col("_n") <= _MH_BAND_CAP))
-        .groupBy("bj", "bk")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("gid"), F.col("members")))
-            ).alias("gs")
-        )
-        .select(F.explode(_pairs_lambda(F.col("gs"))).alias("p"))
-        .groupBy(
-            F.col("p.a.gid").alias("ga"), F.col("p.b.gid").alias("gb")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_bands"),
-            F.first("p.a.members").alias("_ma"),
-            F.first("p.b.members").alias("_mb"),
-        )
-    )
-    a_first = F.col("ma.doc_id") < F.col("mb.doc_id")
-    first = F.when(a_first, F.col("ma")).otherwise(F.col("mb"))
-    second = F.when(a_first, F.col("mb")).otherwise(F.col("ma"))
-    cross = (
-        gp.select("n_bands", F.explode("_ma").alias("ma"), "_mb")
-        .select("n_bands", "ma", F.explode("_mb").alias("mb"))
-        .select(
-            *_endpoint(first, "_a", "id_a"),
-            *_endpoint(second, "_b", "id_b"),
-            "n_bands",
-        )
-    )
-    return cross.unionByName(intra)
-
-
-
-
-
-#: Hot-band cardinality cap (VERDICT r6 "What's wrong" §2): a band key
-#: shared by more than this many DISTINCT signatures is a degenerate
-#: (boilerplate-dominated) band — its quadratic candidate fanout buys
-#: almost no recall, so the operator skips it, exactly like
-#: q_dedup_containment's doc-frequency ceiling skips stopword shingles.
-#: Exact clones are IMMUNE to the cap: identical signatures collapse to
-#: one group before banding, so a million-clone cluster costs one band
-#: row and its pairs are emitted from the group membership directly.
-_MH_BAND_CAP = 64
-
 #: shared WITH-body of the certified MinHash candidate chain (shingle
 #: sets -> signatures -> signature groups -> capped banded group pairs
 #: -> doc-pair candidates), reused VERBATIM by q_dedup_minhash_exact
 #: and the host-level composite q_dedup_host so the two oracles cannot
 #: drift apart.
 _MH_CAND_CTES = f"""s AS (
-            SELECT doc_id, list_distinct({ngrams_sql(TOKENS, _MH_N)}) AS st
+            SELECT doc_id, {_mh_shingles_sql(TOKENS)} AS st
             FROM documents
         ), sh_t AS (
             SELECT doc_id, unnest(st) AS sh FROM s
@@ -2075,14 +1903,7 @@ _MH_CAND_CTES = f"""s AS (
             SELECT g.gid, s2.doc_id AS m
             FROM grp g JOIN sig s2 USING (m0, m1, m2, m3, m4, m5, m6, m7)
         ), bands AS (
-            SELECT gid, j.bj,
-                   CASE j.bj
-                       WHEN 0 THEN CAST(m0 AS VARCHAR) || '_' || CAST(m1 AS VARCHAR)
-                       WHEN 1 THEN CAST(m2 AS VARCHAR) || '_' || CAST(m3 AS VARCHAR)
-                       WHEN 2 THEN CAST(m4 AS VARCHAR) || '_' || CAST(m5 AS VARCHAR)
-                       ELSE CAST(m6 AS VARCHAR) || '_' || CAST(m7 AS VARCHAR)
-                   END AS bk
-            FROM grp CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS bj) j
+            {_mh_band_case_sql("gid", "grp")}
         ), ok AS (
             SELECT bj, bk FROM bands GROUP BY bj, bk
             HAVING count(*) BETWEEN 2 AND {_MH_BAND_CAP}
@@ -2127,125 +1948,18 @@ def q_dedup_minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     MLlib MinHashLSH path (q_dedup_fuzzy), converting the banded
     candidate SET itself from a rows-only smoke into a hash-certified
     result. Emits each surviving pair with its band-collision count
-    and exact trigram Jaccard.
-
-    Plan — NO self-join on the raw band key (VERDICT r6 hot-band
-    finding: an equi-self-join on (band, band-key) emits N^2 candidate
-    rows for an N-doc band, and a clone-heavy corpus at 100 TB
-    concentrates millions of docs on one key). Instead:
-
-    1. identical signatures COLLAPSE to one group (gid = min doc_id,
-       sorted member list) before banding — a clone cluster of any
-       size costs one band row; its pairs (n_bands = all 4 by
-       construction) come straight from the membership array via the
-       indexed combinations lambda (the q_dedup_containment shape),
-       quadratic only in the OUTPUT the operator must emit anyway;
-    2. cross-group candidates come from per-band sorted GROUP-sets
-       (one groupBy on (band, band-key)) with the combinations lambda
-       under a cardinality cap (_MH_BAND_CAP distinct signatures):
-       degenerate boilerplate bands are skipped — bounded fanout, the
-       doc-frequency-ceiling semantics of q_dedup_containment, spelled
-       identically in the oracle;
-    3. group pairs expand to doc pairs through the membership structs
-       (two gid-keyed joins) CARRYING each endpoint's shingle-set
-       fingerprint — order-independent (sum, xor, count) of the
-       seed-0 shingle hashes, computed inside the signature
-       aggregation at zero extra kernel cost (the digest-as-identity
-       assumption every hash-keyed dedup op here already makes, at
-       ~2^-64 collision odds);
-    4. fingerprint-EQUAL pairs short-circuit to Jaccard = 1 with ZERO
-       joins (r10 fact-skew probe fix: a 2000-clone cluster emits
-       ~2M candidate pairs — the required output — but the old
-       recheck joined BOTH full shingle arrays onto every one of
-       them, 54.9x at equal rows vs uniform; clone pairs are
-       fingerprint-equal by construction); only fingerprint-UNEQUAL
-       pairs (banding-cap-bounded cross-group candidates plus rare
-       signature collisions) pay the doc-keyed exact intersect.
-
-    No localCheckpoints anywhere: every frame is single-consumer or
-    exchange-reused (eager checkpoints of the candidate table proved
-    unstable in long-lived sessions — the q_basket_lift block-churn
-    pathology, re-measured r10: second pass 6.6 -> 57.7 s).
-
-    All shuffles key on doc_id, signature, band key, or gid; the
-    md5-per-(shingle, seed) cost is linear CPU that scales out.
-
-    Determinism: min-hash values are exact int64s from hex digits; the
-    band key is their decimal-string concat; member/group arrays are
-    sorted before the order-sensitive combinations lambda; the Jaccard
-    ratio divides exact set sizes — identical doubles both engines,
-    compared against the 0.5 threshold pre-rounding, emitted at 4dp."""
+    and exact trigram Jaccard. The plan (signature collapse, capped
+    banding, fingerprint short-circuit, exact recheck) is the kernel's:
+    operators/dedup.minhash_near_dup_pairs."""
     from ngram_analytics_spark.operators import spread
 
     # tokenizer hoisted to its own projection (longdoc probe r9)
     d = (
         spread(load(spark, sf_dir, "documents"))
         .select("doc_id", F.split("text", " ").alias("toks"))
-        .withColumn("st", F.array_distinct(ngram_col("toks", _MH_N)))
+        .withColumn("st", minhash_shingles("toks"))
     )
-    # explode_outer + null filter, NOT explode: InferFiltersFromGenerate
-    # pushes explode's size(st)>0 predicate below the spread() exchange,
-    # evaluating the whole shingle lambda on the single-task scan side
-    # (measured 2.9 -> 0.67 s for the signature stage at sf0.1).
-    sh = d.select("doc_id", F.explode_outer("st").alias("sh")).filter(
-        F.col("sh").isNotNull()
-    )
-    # v is the seed-0 first-chunk hash (shared with m0 = min(v)); its
-    # order-independent (sum, xor, count) over the per-doc DISTINCT
-    # shingles is a content fingerprint of the shingle SET, computed
-    # inside the SAME aggregation as the signatures — zero extra
-    # kernel runs, zero extra exchanges
-    v = F.conv(
-        F.substring(F.md5(F.concat(F.lit("0:"), F.col("sh"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
-    sig = (
-        sh.withColumn("v", v)
-        .groupBy("doc_id")
-        .agg(
-            *[_mh_spark(i) for i in range(_MH_K)],
-            F.sum("v").alias("sds"),
-            F.expr("bit_xor(v)").alias("sdx"),
-            F.count("*").alias("n_sh"),
-        )
-    )
-    cand = _mh_candidate_pairs(sig)
-    eq_pred = (
-        (F.col("sds_a") == F.col("sds_b"))
-        & (F.col("sdx_a") == F.col("sdx_b"))
-        & (F.col("n_sh_a") == F.col("n_sh_b"))
-    )
-    # fingerprint-EQUAL pairs (clone clusters — the fact-skew probe's
-    # 54.9x bomb) need no recheck at all: Jaccard = 1 by content
-    # identity, n_common = the carried set size, zero joins
-    eq = cand.filter(eq_pred).select(
-        "id_a",
-        "id_b",
-        "n_bands",
-        F.col("n_sh_a").cast("int").alias("n_common"),
-        F.lit(1.0).alias("jaccard"),
-    )
-    sa = d.select(F.col("doc_id").alias("id_a"), F.col("st").alias("st_a"))
-    sb = d.select(F.col("doc_id").alias("id_b"), F.col("st").alias("st_b"))
-    common = F.size(F.array_intersect("st_a", "st_b"))
-    union = F.size("st_a") + F.size("st_b") - common
-    ratio = common.cast("double") / union
-    uneq = (
-        cand.filter(~eq_pred)
-        .select("id_a", "id_b", "n_bands")
-        .join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(ratio >= F.lit(_MH_MIN_J))
-        .select(
-            "id_a",
-            "id_b",
-            "n_bands",
-            common.alias("n_common"),
-            round4det(ratio).alias("jaccard"),
-        )
-    )
-    return eq.unionByName(uneq)
+    return minhash_near_dup_pairs(d)
 
 
 @REG.register(
@@ -2391,145 +2105,11 @@ q_dedup_host.__doc__ = q_dedup_host.__doc__.format(j=_MH_MIN_J)
 _MH_IDX_CLEANUP: set[str] = set()
 
 
-def _mh_sig_frame(d: DataFrame) -> DataFrame:
-    """(doc_id, m0..m{K-1}, sds, sdx, n_sh) over a (doc_id, st)
-    shingle-set frame — the q_dedup_minhash_exact signature stage
-    (md5-seeded min-hashes + the order-independent (sum, xor, count)
-    shingle-set fingerprint, computed in ONE map-side-combined
-    aggregation), factored so the incremental index builds and probes
-    with the exact spelling the certified full-corpus operator uses."""
-    sh = d.select("doc_id", F.explode_outer("st").alias("sh")).filter(
-        F.col("sh").isNotNull()
-    )
-    v = F.conv(
-        F.substring(F.md5(F.concat(F.lit("0:"), F.col("sh"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
-    return (
-        sh.withColumn("v", v)
-        .groupBy("doc_id")
-        .agg(
-            *[_mh_spark(i) for i in range(_MH_K)],
-            F.sum("v").alias("sds"),
-            F.expr("bit_xor(v)").alias("sdx"),
-            F.count("*").alias("n_sh"),
-        )
-    )
-
-
-def _mh_band_rows(df: DataFrame, id_col: str) -> DataFrame:
-    """(id, bj, bk) LSH band rows of a signature frame: 4 bands of 2
-    rows, band key = decimal-string concat (the q_dedup_minhash_exact
-    banding, factored for the incremental probe)."""
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("bj"),
-            F.concat_ws("_", f"m{2 * j}", f"m{2 * j + 1}").alias("bk"),
-        )
-        for j in range(_MH_BANDS)
-    ]
-    return df.select(
-        id_col, F.explode(F.array(*band_structs)).alias("b")
-    ).select(id_col, "b.bj", "b.bk")
-
-
-def _mh_index_probe(
-    spark: SparkSession, newd: DataFrame, store: DataFrame, idx: str
-) -> DataFrame:
-    """Probe a persisted MinHash index with a new batch: returns one
-    row per candidate pair (nid, cid, is_dup). ``newd`` is the batch's
-    (doc_id, st) shingle-set frame; ``store`` the same frame for the
-    indexed docs (consulted ONLY for the candidate-bounded exact
-    recheck — fingerprint-equal pairs never touch it); ``idx`` the
-    minhash_index_write directory. Candidate generation joins the
-    batch's 4 band rows per doc against the index's band projection
-    under the _MH_BAND_CAP distinct-signature hot-key skip.
-
-    CONTRACT: ``store`` must cover every doc_id in the index — the
-    recheck joins it INNER, so a missing document silently drops its
-    candidate pairs instead of failing; callers that maintain the
-    index incrementally must grow the doc store with each upsert
-    (the invariance test's discipline)."""
-    groups = spark.read.parquet(f"{idx}/groups")
-    members = spark.read.parquet(f"{idx}/members")
-    cb = _mh_band_rows(groups, "gid")
-    ok = (
-        cb.groupBy("bj", "bk")
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") <= _MH_BAND_CAP)
-        .select("bj", "bk")
-    )
-    nsig = _mh_sig_frame(newd)
-    nb = _mh_band_rows(nsig, "doc_id").withColumnRenamed("doc_id", "nid")
-    cand = (
-        nb.join(ok, ["bj", "bk"])
-        .join(cb, ["bj", "bk"])
-        .select("nid", "gid")
-        .distinct()
-    )
-    pairs = cand.join(
-        members.select(
-            "gid",
-            F.col("doc_id").alias("cid"),
-            F.col("sds").alias("sds_b"),
-            F.col("sdx").alias("sdx_b"),
-            F.col("n_sh").alias("n_sh_b"),
-        ),
-        "gid",
-    ).join(
-        nsig.select(
-            F.col("doc_id").alias("nid"),
-            F.col("sds").alias("sds_a"),
-            F.col("sdx").alias("sdx_a"),
-            F.col("n_sh").alias("n_sh_a"),
-        ),
-        "nid",
-    )
-    eq_pred = (
-        (F.col("sds_a") == F.col("sds_b"))
-        & (F.col("sdx_a") == F.col("sdx_b"))
-        & (F.col("n_sh_a") == F.col("n_sh_b"))
-    )
-    eq = pairs.filter(eq_pred).select(
-        "nid", "cid", F.lit(True).alias("is_dup")
-    )
-    sa = newd.select(F.col("doc_id").alias("nid"), F.col("st").alias("st_a"))
-    sb = store.select(F.col("doc_id").alias("cid"), F.col("st").alias("st_b"))
-    common = F.size(F.array_intersect("st_a", "st_b"))
-    ratio = common.cast("double") / (
-        F.size("st_a") + F.size("st_b") - common
-    )
-    uneq = (
-        pairs.filter(~eq_pred)
-        .select("nid", "cid")
-        .join(sa, "nid")
-        .join(sb, "cid")
-        .select("nid", "cid", (ratio >= F.lit(_MH_MIN_J)).alias("is_dup"))
-    )
-    return eq.unionByName(uneq)
-
-
-def _mh_band_case_sql(id_expr: str, src: str) -> str:
-    """DuckDB spelling of one signature row's 4 band rows."""
-    return (
-        f"SELECT {id_expr}, j.bj,"
-        " CASE j.bj"
-        " WHEN 0 THEN CAST(m0 AS VARCHAR) || '_' || CAST(m1 AS VARCHAR)"
-        " WHEN 1 THEN CAST(m2 AS VARCHAR) || '_' || CAST(m3 AS VARCHAR)"
-        " WHEN 2 THEN CAST(m4 AS VARCHAR) || '_' || CAST(m5 AS VARCHAR)"
-        " ELSE CAST(m6 AS VARCHAR) || '_' || CAST(m7 AS VARCHAR)"
-        " END AS bk"
-        f" FROM {src} CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS bj) j"
-    )
-
-
 @REG.register(
     "q_dedup_incremental_fuzzy",
     oracle=f"""
         WITH s AS (
-            SELECT doc_id, lang,
-                   list_distinct({ngrams_sql(TOKENS, _MH_N)}) AS st
+            SELECT doc_id, lang, {_mh_shingles_sql(TOKENS)} AS st
             FROM documents
         ), sh_t AS (
             SELECT doc_id, unnest(st) AS sh FROM s
@@ -2624,16 +2204,14 @@ def q_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ngram_analytics_spark.operators import spread
-    from ngram_analytics_spark.operators.dedup import minhash_index_write
 
     d = (
         spread(load(spark, sf_dir, "documents"))
         .select("doc_id", "lang", F.split("text", " ").alias("toks"))
-        .withColumn("st", F.array_distinct(ngram_col("toks", _MH_N)))
+        .withColumn("st", minhash_shingles("toks"))
     )
     newd = d.filter(F.col("doc_id") % 7 == 0)
     corp = d.filter(F.col("doc_id") % 7 != 0)
-    keys = [f"m{i}" for i in range(_MH_K)]
 
     # keyed by corpus AND pid: two concurrent sessions on the same
     # corpus (parallel pytest workers, driver + bench) must not race
@@ -2651,10 +2229,10 @@ def q_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         _MH_IDX_CLEANUP.add(idx)
         atexit.register(shutil.rmtree, idx, ignore_errors=True)
-    minhash_index_write(_mh_sig_frame(corp.select("doc_id", "st")), idx, keys)
+    minhash_index_write(minhash_signatures(corp.select("doc_id", "st")), idx)
 
-    pairs = _mh_index_probe(
-        spark, newd.select("doc_id", "st"), corp.select("doc_id", "st"), idx
+    pairs = minhash_index_probe(
+        newd.select("doc_id", "st"), corp.select("doc_id", "st"), idx
     )
     dup = pairs.filter("is_dup").select("nid").distinct()
     pc = pairs.groupBy("nid").agg(F.count("*").alias("_pc"))
@@ -5207,7 +4785,7 @@ def q_dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = (
         sets.filter(F.size("srcs") >= 2)
-        .select(F.explode(_pairs_lambda(F.col("srcs"))).alias("p"))
+        .select(F.explode(combo_pairs(F.col("srcs"))).alias("p"))
         .select(
             F.col("p.a").alias("s1"), F.col("p.b").alias("s2")
         )
@@ -6705,7 +6283,7 @@ def q_dedup_semantic(
         g2.filter(F.size("members") >= 2)
         .select(
             "cluster_id",
-            F.explode(_pairs_lambda(F.col("members"))).alias("p"),
+            F.explode(combo_pairs(F.col("members"))).alias("p"),
         )
         .select("cluster_id", F.col("p.a").alias("ia"), F.col("p.b").alias("ib"))
     )

@@ -1861,52 +1861,17 @@ def q_stream_foreach_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------- streaming dedup-signature census
 
-def _mh_stream_sig_cols():
-    """Per-ROW minhash signature m0..m7 over a hoisted shingle array:
-    array_min(transform(...)) instead of the batch kernel's
-    explode+groupBy min — semantically identical (min over the same
-    per-shingle hash values), but a stateless projection, so the
-    streaming query keeps its ONE allowed aggregation for the
-    signature-group census.
-
-    The hex->int parse happens AFTER the array_min, once per (doc,
-    m_i), not per element (r15, VERDICT r14 item 5 — the _mh_spark
-    argument): md5 hex is fixed-width lowercase, so binary string
-    order on the 8-char chunk equals numeric order and
-    array_min(transform(conv)) == conv(array_min(transform)). The 8
-    interpreted conv passes per element drop to 8 per doc; only the
-    cheap substring re-walks remain element-wise."""
-    from ngram_analytics_spark.queries.llm_q import _MH_K
-
-    def chunk_min(seed: int, chunk: int):
-        # NOTE: the lambda must take exactly ONE parameter — PySpark
-        # treats a two-arg transform lambda as (element, index), so a
-        # default-arg trick (lambda h, c=chunk: ...) silently receives
-        # the INDEX column as c
-        def fn(h):
-            return F.substring(h, 1 + 8 * chunk, 8)
-
-        return F.conv(
-            F.array_min(F.transform(F.col(f"h{seed}"), fn)), 16, 10
-        ).cast("long")
-
-    return [
-        chunk_min(*divmod(i, 4)).alias(f"m{i}") for i in range(_MH_K)
-    ]
-
-
 def _mh_stream_oracle() -> str:
-    from ngram_analytics_spark.operators.ngram import ngrams_sql
-    from ngram_analytics_spark.queries.llm_q import (
+    from ngram_analytics_spark.operators.dedup import (
         _MH_K,
-        _MH_N,
+        _MH_SIG,
+        _mh_shingles_sql,
         _mh_sql,
-        TOKENS,
     )
 
     return f"""
         WITH s AS (
-            SELECT doc_id, list_distinct({ngrams_sql(TOKENS, _MH_N)})
+            SELECT doc_id, {_mh_shingles_sql("string_split(text, ' ')")}
                        AS st
             FROM documents
         ), sh_t AS (
@@ -1918,7 +1883,7 @@ def _mh_stream_oracle() -> str:
             SELECT CAST(min(doc_id) AS BIGINT) AS gid,
                    CAST(count(*) AS BIGINT) AS n_docs
             FROM sig
-            GROUP BY {", ".join(f"m{i}" for i in range(_MH_K))}
+            GROUP BY {", ".join(_MH_SIG)}
         )
         SELECT gid, n_docs FROM grp WHERE n_docs >= 2
     """
@@ -1928,7 +1893,8 @@ def _mh_stream_oracle() -> str:
 def q_stream_live_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-duplicate SIGNATURE census under REAL Structured
     Streaming: documents stream in, each row projects its 8-hash
-    MinHash signature statelessly (array_min over hoisted per-shingle
+    MinHash signature statelessly (operators/dedup.
+    minhash_stream_signatures: array_min over hoisted per-shingle
     digest arrays — the batch kernel's explode+groupBy min is a second
     aggregation streaming doesn't allow), and ONE complete-mode
     aggregation groups by signature — emitting (gid, n_docs) for every
@@ -1946,8 +1912,11 @@ def q_stream_live_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     from ngram_analytics_spark import streaming as S
-    from ngram_analytics_spark.operators.ngram import ngram_col
-    from ngram_analytics_spark.queries.llm_q import _MH_N
+    from ngram_analytics_spark.operators.dedup import (
+        _MH_SIG,
+        minhash_shingles,
+        minhash_stream_signatures,
+    )
 
     docs = S.read_documents_stream(spark, sf_dir)
     # the file source hands availableNow batches over the file's few
@@ -1958,25 +1927,9 @@ def q_stream_live_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         docs.repartition(spark.sparkContext.defaultParallelism)
         .select("doc_id", F.split("text", " ").alias("toks"))
-        .withColumn("st", F.array_distinct(ngram_col("toks", _MH_N)))
-        .filter(F.size("st") >= 1)
-        .withColumn(
-            "h0",
-            F.transform(
-                F.col("st"),
-                lambda sh: F.md5(F.concat(F.lit("0:"), sh)),
-            ),
-        )
-        .withColumn(
-            "h1",
-            F.transform(
-                F.col("st"),
-                lambda sh: F.md5(F.concat(F.lit("1:"), sh)),
-            ),
-        )
+        .withColumn("st", minhash_shingles("toks"))
     )
-    sig = d.select("doc_id", *_mh_stream_sig_cols())
-    grp = sig.groupBy(*[f"m{i}" for i in range(8)]).agg(
+    grp = minhash_stream_signatures(d).groupBy(*_MH_SIG).agg(
         F.min("doc_id").alias("gid"),
         F.count("*").cast("long").alias("n_docs"),
     )

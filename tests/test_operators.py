@@ -1361,12 +1361,9 @@ def test_minhash_exact_sound_and_high_recall(spark):
     prob 1-(1-0.81)^4 ~ 99.87%) is perfect on this corpus. The hash
     family is deterministic, so this is a fixed fact, not a flaky
     sample."""
+    from ngram_analytics_spark.operators.dedup import _MH_MIN_J, _MH_N
     from ngram_analytics_spark.operators.ngram import ngram_col
-    from ngram_analytics_spark.queries.llm_q import (
-        _MH_MIN_J,
-        _MH_N,
-        q_dedup_minhash_exact,
-    )
+    from ngram_analytics_spark.queries.llm_q import q_dedup_minhash_exact
 
     got = {
         (r.id_a, r.id_b): r.jaccard

@@ -502,11 +502,11 @@ def test_minhash_clone_cluster_bounded_candidates(spark):
     fanout); their 4950 pairs are emitted from the membership array —
     output-driven, with n_bands = all 4 by construction. A degenerate
     band shared by > _MH_BAND_CAP DISTINCT signatures is skipped."""
-    from ngram_analytics_spark.queries.llm_q import (
+    from ngram_analytics_spark.operators.dedup import (
         _MH_BANDS,
-        _MH_K,
-        _mh_candidate_pairs,
-        _mh_spark,
+        _MH_SIG,
+        minhash_candidate_pairs,
+        minhash_signatures,
     )
 
     clones = [(i, "the quick brown fox jumps over the lazy dog") for i in range(100)]
@@ -515,23 +515,19 @@ def test_minhash_clone_cluster_bounded_candidates(spark):
         for i in range(20)
     ]
     df = spark.createDataFrame(clones + uniques, ["doc_id", "text"])
-    sh = df.select(
+    st = df.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(
-                        F.lit(1), F.size(F.split("text", " ")) - 2
-                    ),
-                    lambda i: F.concat_ws(
-                        " ", F.slice(F.split("text", " "), i, 3)
-                    ),
-                )
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.size(F.split("text", " ")) - 2),
+                lambda i: F.concat_ws(
+                    " ", F.slice(F.split("text", " "), i, 3)
+                ),
             )
-        ).alias("sh"),
+        ).alias("st"),
     )
-    sig = sh.groupBy("doc_id").agg(*[_mh_spark(i) for i in range(_MH_K)])
-    cand = _mh_candidate_pairs(sig)
+    sig = minhash_signatures(st).select("doc_id", *_MH_SIG)
+    cand = minhash_candidate_pairs(sig)
     rows = cand.collect()
     clone_pairs = [
         r for r in rows if r.id_a < 100 and r.id_b < 100
@@ -545,8 +541,7 @@ def test_minhash_clone_cluster_bounded_candidates(spark):
 
     # signature collapse: the clone cluster contributes exactly ONE
     # group, so the per-band group-sets stay tiny
-    sig_keys = [f"m{i}" for i in range(_MH_K)]
-    n_groups = sig.select(*sig_keys).distinct().count()
+    n_groups = sig.select(*_MH_SIG).distinct().count()
     assert n_groups <= 21
 
 
@@ -555,10 +550,10 @@ def test_minhash_degenerate_band_is_skipped(spark):
     is skipped entirely (no cross-group candidates from it)."""
     from pyspark.sql import Row as R
 
-    from ngram_analytics_spark.queries.llm_q import (
+    from ngram_analytics_spark.operators.dedup import (
         _MH_BAND_CAP,
         _MH_K,
-        _mh_candidate_pairs,
+        minhash_candidate_pairs,
     )
 
     # synthetic signatures: band 0 (m0, m1) identical across ALL docs,
@@ -576,7 +571,7 @@ def test_minhash_degenerate_band_is_skipped(spark):
         for i in range(n)
     ]
     sig = spark.createDataFrame(rows)
-    assert _mh_candidate_pairs(sig).count() == 0
+    assert minhash_candidate_pairs(sig).count() == 0
 
 
 def test_winnowing_fingerprint_invariants(spark):
@@ -767,15 +762,12 @@ def test_minhash_index_upsert_equals_rebuild(spark, tmp_path):
     near-dup of a doc that only ever entered via the batch-1 UPSERT
     (proving the state actually accumulates, never rescanning)."""
     from ngram_analytics_spark.operators.dedup import (
+        minhash_index_probe,
         minhash_index_upsert,
         minhash_index_write,
+        minhash_signatures,
     )
     from ngram_analytics_spark.operators.ngram import ngram_col
-    from ngram_analytics_spark.queries.llm_q import (
-        _MH_K,
-        _mh_index_probe,
-        _mh_sig_frame,
-    )
     from pyspark.sql import functions as F
 
     def mk(tid: int, mutate: int = 0) -> str:
@@ -797,26 +789,25 @@ def test_minhash_index_upsert_equals_rebuild(spark, tmp_path):
     corpus = [(i, mk(i)) for i in range(1, 6)] + [(6, mk(1))]
     b1 = [(100, mk(2, mutate=2)), (101, mk(60))]  # near-dup of 2 + novel
     b2 = [(200, mk(60)), (201, mk(70))]  # clone of the B1-only doc 101
-    keys = [f"m{i}" for i in range(_MH_K)]
 
     inc = str(tmp_path / "idx_inc")
-    minhash_index_write(_mh_sig_frame(frame(corpus)), inc, keys)
+    minhash_index_write(minhash_signatures(frame(corpus)), inc)
 
-    p1 = _mh_index_probe(spark, frame(b1), frame(corpus), inc).collect()
+    p1 = minhash_index_probe(frame(b1), frame(corpus), inc).collect()
     assert {(r.nid, r.cid) for r in p1 if r.is_dup} == {(100, 2)}
 
-    minhash_index_upsert(_mh_sig_frame(frame(b1)), inc, keys)
+    minhash_index_upsert(minhash_signatures(frame(b1)), inc)
     # idempotence under at-least-once delivery: re-upserting the SAME
     # batch must be a no-op (already-indexed doc_ids anti-join out)
-    minhash_index_upsert(_mh_sig_frame(frame(b1)), inc, keys)
+    minhash_index_upsert(minhash_signatures(frame(b1)), inc)
     store2 = frame(corpus + b1)  # doc store grows with each batch
-    p2 = _mh_index_probe(spark, frame(b2), store2, inc).collect()
+    p2 = minhash_index_probe(frame(b2), store2, inc).collect()
     # doc 200 is caught ONLY because batch 1 was upserted
     assert {(r.nid, r.cid) for r in p2 if r.is_dup} == {(200, 101)}
 
     # state invariance: upsert-maintained == rebuilt-from-union
     reb = str(tmp_path / "idx_rebuild")
-    minhash_index_write(_mh_sig_frame(store2), reb, keys)
+    minhash_index_write(minhash_signatures(store2), reb)
     for table in ("groups", "members"):
         a = sorted(
             map(tuple, spark.read.parquet(f"{inc}/{table}").collect())
@@ -836,15 +827,13 @@ def test_minhash_index_upsert_non_monotone_ids(spark, tmp_path):
     PARTITION is identical to the rebuild's, and probe verdicts are
     unchanged (they depend on membership, never on gid labels)."""
     from ngram_analytics_spark.operators.dedup import (
+        _MH_SIG,
+        minhash_index_probe,
         minhash_index_upsert,
         minhash_index_write,
+        minhash_signatures,
     )
     from ngram_analytics_spark.operators.ngram import ngram_col
-    from ngram_analytics_spark.queries.llm_q import (
-        _MH_K,
-        _mh_index_probe,
-        _mh_sig_frame,
-    )
     from pyspark.sql import functions as F
 
     def mk(tid: int) -> str:
@@ -864,14 +853,12 @@ def test_minhash_index_upsert_non_monotone_ids(spark, tmp_path):
     # doc 50's text, 7 clones doc 60's) and adds one novel doc at 3
     corpus = [(50, mk(1)), (60, mk(2))]
     batch = [(5, mk(1)), (7, mk(2)), (3, mk(9))]
-    keys = [f"m{i}" for i in range(_MH_K)]
-
     inc = str(tmp_path / "idx_inc")
-    minhash_index_write(_mh_sig_frame(frame(corpus)), inc, keys)
-    minhash_index_upsert(_mh_sig_frame(frame(batch)), inc, keys)
+    minhash_index_write(minhash_signatures(frame(corpus)), inc)
+    minhash_index_upsert(minhash_signatures(frame(batch)), inc)
 
     reb = str(tmp_path / "idx_rebuild")
-    minhash_index_write(_mh_sig_frame(frame(corpus + batch)), reb, keys)
+    minhash_index_write(minhash_signatures(frame(corpus + batch)), reb)
 
     def partition(path):
         g = spark.read.parquet(f"{path}/groups")
@@ -879,7 +866,7 @@ def test_minhash_index_upsert_non_monotone_ids(spark, tmp_path):
         rows = g.join(m, "gid").collect()
         out = {}
         for r in rows:
-            sig = tuple(r[k] for k in keys)
+            sig = tuple(r[k] for k in _MH_SIG)
             out.setdefault(sig, set()).add(r.doc_id)
         return out
 
@@ -904,7 +891,7 @@ def test_minhash_index_upsert_non_monotone_ids(spark, tmp_path):
     for path in (inc, reb):
         got = {
             (r.nid, r.cid)
-            for r in _mh_index_probe(spark, probe, store, path).collect()
+            for r in minhash_index_probe(probe, store, path).collect()
             if r.is_dup
         }
         assert got == {(999, 5), (999, 50)}
@@ -974,11 +961,11 @@ def test_minhash_clone_flood_with_hot_band(spark):
     no cross-group candidates, no cap-violating buffered cell."""
     from pyspark.sql import Row as R
 
-    from ngram_analytics_spark.queries.llm_q import (
+    from ngram_analytics_spark.operators.dedup import (
         _MH_BAND_CAP,
         _MH_BANDS,
         _MH_K,
-        _mh_candidate_pairs,
+        minhash_candidate_pairs,
     )
 
     n_clones = 2000
@@ -997,7 +984,7 @@ def test_minhash_clone_flood_with_hot_band(spark):
         )
         for i in range(n_hot)
     ]
-    cand = _mh_candidate_pairs(spark.createDataFrame(rows))
+    cand = minhash_candidate_pairs(spark.createDataFrame(rows))
     n_cand = cand.count()
     assert n_cand == n_clones * (n_clones - 1) // 2
     # spot-check: clone pairs carry all bands; no hot-band doc appears
@@ -1006,13 +993,30 @@ def test_minhash_clone_flood_with_hot_band(spark):
     assert cand.filter(F.col("id_a") >= 10_000).count() == 0
 
 
+def _minhash_truth(shingles) -> tuple[int, ...]:
+    """hashlib ground truth of m0..m7 over one doc's shingle set."""
+    import hashlib
+
+    return tuple(
+        min(
+            int(
+                hashlib.md5(f"{seed}:{s}".encode()).hexdigest()[
+                    8 * chunk : 8 * chunk + 8
+                ],
+                16,
+            )
+            for s in shingles
+        )
+        for seed, chunk in (divmod(i, 4) for i in range(8))
+    )
+
+
 def test_minhash_hex_min_order_isomorphism(spark):
-    """r15 _mh_spark respelling: the min-hash parses hex AFTER the
+    """r15 min-hash respelling: the min-hash parses hex AFTER the
     min (conv(min(h8)) / conv(array_min(...))), which is only valid
     because fixed-width lowercase-hex order == numeric order. Pin the
-    isomorphism on real md5 chunks AND pin batch == streaming
-    signature values on a corpus slice."""
-    import hashlib
+    isomorphism on real md5 chunks AND pin the shipped batch and
+    streaming signature builders to hashlib on a corpus slice."""
     import random
 
     rnd = random.Random(7)
@@ -1020,10 +1024,11 @@ def test_minhash_hex_min_order_isomorphism(spark):
     assert int(min(vals), 16) == min(int(v, 16) for v in vals)
 
     # batch groupBy-min vs streaming array_min projection must agree
-    from ngram_analytics_spark.operators.ngram import ngram_col
-    from ngram_analytics_spark.queries.llm_q import _MH_K, _MH_N, _mh_spark
-    from ngram_analytics_spark.queries.timeseries_q import (
-        _mh_stream_sig_cols,
+    from ngram_analytics_spark.operators.dedup import (
+        _MH_SIG,
+        minhash_shingles,
+        minhash_signatures,
+        minhash_stream_signatures,
     )
 
     rows = [
@@ -1032,36 +1037,54 @@ def test_minhash_hex_min_order_isomorphism(spark):
     ]
     d = spark.createDataFrame(rows, ["doc_id", "text"]).select(
         "doc_id", F.split("text", " ").alias("toks")
-    ).withColumn("st", F.array_distinct(ngram_col("toks", _MH_N)))
-    sh = d.select("doc_id", F.explode("st").alias("sh"))
-    batch = sh.groupBy("doc_id").agg(*[_mh_spark(i) for i in range(_MH_K)])
-    stream = (
-        d.filter(F.size("st") >= 1)
-        .withColumn(
-            "h0",
-            F.transform(F.col("st"), lambda s: F.md5(F.concat(F.lit("0:"), s))),
-        )
-        .withColumn(
-            "h1",
-            F.transform(F.col("st"), lambda s: F.md5(F.concat(F.lit("1:"), s))),
-        )
-        .select("doc_id", *_mh_stream_sig_cols())
+    ).withColumn("st", minhash_shingles("toks"))
+    batch = sorted(
+        map(tuple, minhash_signatures(d).select("doc_id", *_MH_SIG).collect())
     )
-    assert sorted(map(tuple, batch.collect())) == sorted(
-        map(tuple, stream.collect())
+    stream = sorted(map(tuple, minhash_stream_signatures(d).collect()))
+    assert batch == stream
+    # and against Python hashlib ground truth for every doc
+    truth = sorted((r.doc_id, *_minhash_truth(r.st)) for r in d.collect())
+    assert len(truth) == 60
+    assert batch == truth
+
+
+def test_minhash_signatures_skip_short_and_null_docs(spark):
+    """Docs with no trigram (fewer than 3 tokens, empty text) or NULL
+    text get no signature row from EITHER builder; every other doc
+    gets the same hashlib values from both. The batch builder drops
+    them through its explode_outer + null filter, the stream builder
+    through its size filter — the two must not drift apart."""
+    from ngram_analytics_spark.operators.dedup import (
+        _MH_SIG,
+        minhash_shingles,
+        minhash_signatures,
+        minhash_stream_signatures,
     )
-    # and against Python hashlib ground truth for one doc
-    doc0 = [r.sh for r in sh.filter(F.col("doc_id") == 0).collect()]
-    got0 = sorted(map(tuple, batch.filter(F.col("doc_id") == 0).collect()))[0]
-    for i in range(_MH_K):
-        seed, chunk = divmod(i, 4)
-        exp = min(
-            int(
-                hashlib.md5(f"{seed}:{s}".encode()).hexdigest()[
-                    8 * chunk : 8 * chunk + 8
-                ],
-                16,
-            )
-            for s in doc0
-        )
-        assert got0[1 + i] == exp
+
+    texts = {
+        0: None,
+        1: "",
+        2: "one",
+        3: "two words",
+        4: "exactly three words",
+        5: "a b c d e a b c",
+    }
+    d = (
+        spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+        .select("doc_id", F.split("text", " ").alias("toks"))
+        .withColumn("st", minhash_shingles("toks"))
+    )
+    batch = sorted(
+        map(tuple, minhash_signatures(d).select("doc_id", *_MH_SIG).collect())
+    )
+    stream = sorted(map(tuple, minhash_stream_signatures(d).collect()))
+
+    def trigrams(text):
+        t = text.split(" ")
+        return {" ".join(t[j : j + 3]) for j in range(len(t) - 2)}
+
+    truth = [(i, *_minhash_truth(trigrams(texts[i]))) for i in (4, 5)]
+    assert batch == truth
+    assert stream == truth
+
