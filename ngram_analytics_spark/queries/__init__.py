@@ -3,169 +3,44 @@
 Each submodule contributes a QueryRegistry; keys are the SURVEY.md §2
 declared query names and must be globally unique (merge() enforces).
 
-Key ORDER matters: the differential driver grades the registry keys in
-iteration order, so GRADED_FIRST pins the keys with correctness RISK
-at the front and the rest follow OLDEST-DRIVER-GRADE-FIRST, keeping
-certification staleness bounded without any hand-maintained queue.
+The merged key order is merge order: the modules in ``MODULES`` order,
+then registration order within each module. It depends on the code
+alone — building the registry reads no file and runs no subprocess.
 """
 
 from __future__ import annotations
 
-from ngram_analytics_spark.registry import QueryRegistry
+import importlib
 
-# The ~50 keys the differential driver should grade first — GENERATED
-# by ``python tools/graded_window.py`` (VERDICT r11 item 6; the
-# doc-lint test_graded_first_matches_generator pins this tuple to the
-# tool's output, so editing a query without regenerating fails the
-# suite).  Composition rule: (a) keys with no driver CORRECTNESS row
-# yet (r15: none — 403/403 graded), (b) keys whose own function/oracle
-# text changed since the round base, (c) the stalest-graded tail — the
-# r06 cohort (oldest remaining grades) leads per VERDICT r14 item 8.
-GRADED_FIRST: tuple[str, ...] = (
-    "q_dedup_fuzzy_jaccard",
-    "q_basket_lift",
-    "q_fn_map2",
-    "q_sample_bootstrap",
-    "q_fn_xpath",
-    "q_udtf_poly",
-    "q_ts_twap",
-    "q_vocab_coverage",
-    "q_vocab_spectrum",
-    "q_agg_bitmap",
-    "q_agg_filter_clause",
-    "q_agg_moments",
-    "q_agg_weighted_median",
-    "q_corpus_gini",
-    "q_dedup_simhash_exact",
-    "q_fn_aes",
-    "q_fn_explode_outer",
-    "q_fn_json2",
-    "q_fn_str_to_map",
-    "q_funnel_windowed",
-    "q_graph_jaccard_nbrs",
-    "q_graph_kcore",
-    "q_join_bloom",
-    "q_join_overlap",
-    "q_join_scd2_pit",
-    "q_ks_drift",
-    "q_length_buckets",
-    "q_ml_power_iter",
-    "q_pack_sequences",
-    "q_sample_balanced",
-    "q_sample_temperature",
-    "q_skyline_pareto",
-    "q_source_quality",
-    "q_source_text",
-    "q_sql_group_by_all",
-    "q_stream_live_leaderboard",
-    "q_tpch_q1",
-    "q_tpch_q11",
-    "q_tpch_q13",
-    "q_tpch_q14",
-    "q_tpch_q15",
-    "q_tpch_q16",
-    "q_tpch_q19",
-    "q_tpch_q2",
-    "q_tpch_q21",
-    "q_tpch_q22",
-    "q_tpch_q4",
-    "q_tpch_q6",
-    "q_tpch_q8",
-    "q_tpch_q9",
+from ngram_analytics_spark.registry import ROWS_ONLY_BY_DESIGN, QueryRegistry
+
+#: query submodules, in merge order
+MODULES: tuple[str, ...] = (
+    "text_q",
+    "relational",
+    "relational2",
+    "relational3",
+    "relational4",
+    "relational5",
+    "relational6",
+    "relational7",
+    "llm_q",
+    "timeseries_q",
+    "udf_q",
+    "pipeline_q",
+    "events_q",
+    "corpus_q",
+    "graph_q",
+    "layout_q",
+    "sampling_q",
+    "quality_q",
 )
-# indirect (one-hop helper) changes in r14, re-graded via the
-# oldest-first rotation below rather than displacing the stale
-# cohort (r14 kernel/operator re-spellings — same values, pytest +
-# diffcheck pin the shared machinery):
-#   q_ab_mann_whitney, q_agg_weighted_median, q_anomaly_iqr, q_compaction_plan, q_dedup_containment, q_dedup_cross_source, q_dedup_incremental_fuzzy, q_dedup_jaccard, q_dedup_minhash_exact, q_ks_drift, q_ml_auc_pr, q_ml_cost_threshold, q_ml_kendall_tau, q_ml_ks_separation, q_ml_lift_gain, q_ml_pr_at_recall, q_ml_spearman, q_ngram_bigram, q_ngram_fewer_tokens, q_ngram_novelty, q_ngram_topk, q_ngram_trigram, q_pareto_share, q_range_partition_plan, q_sketch_bloom_exact, q_stream_live_minhash, q_winsorize
-
-#: The r7-r12 hand-maintained DEFERRED_R* promotion queues are
-#: retired: everything after GRADED_FIRST now orders itself
-#: oldest-driver-grade-first from the CORRECTNESS_r*.json archives at
-#: the repo root (committed each round close; the newest may briefly
-#: be untracked in the post-grade state — tools/graded_window.py and
-#: the doc lint tolerate that), so staleness is bounded by
-#: construction instead of by queue bookkeeping.
-
-
-def _latest_grades() -> dict[str, int]:
-    """key -> newest round with a driver CORRECTNESS row (from the
-    committed per-round archives at the repo root). Mirrors
-    tools/graded_window.latest_grades (kept dependency-free here:
-    tools/ is not a package)."""
-    import glob
-    import json
-    import os
-    import re
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    latest: dict[str, int] = {}
-    for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)\.json$", f)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(f) as fh:
-                keys = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for k in keys:
-            latest[k] = max(latest.get(k, 0), rnd)
-    return latest
 
 
 def build_registry() -> QueryRegistry:
-    from ngram_analytics_spark.queries import (
-        corpus_q,
-        events_q,
-        graph_q,
-        layout_q,
-        llm_q,
-        pipeline_q,
-        quality_q,
-        relational,
-        relational2,
-        relational3,
-        relational4,
-        relational5,
-        relational6,
-        relational7,
-        sampling_q,
-        text_q,
-        timeseries_q,
-        udf_q,
-    )
-
     merged = QueryRegistry()
-    for mod in (
-        text_q,
-        relational,
-        relational2,
-        relational3,
-        relational4,
-        relational5,
-        relational6,
-        relational7,
-        llm_q,
-        timeseries_q,
-        udf_q,
-        pipeline_q,
-        events_q,
-        corpus_q,
-        graph_q,
-        layout_q,
-        sampling_q,
-        quality_q,
-    ):
-        merged.merge(mod.REG)
-
-    missing = [k for k in GRADED_FIRST if k not in merged.queries]
-    if missing:
-        raise ValueError(f"GRADED_FIRST keys not registered: {missing}")
-    from ngram_analytics_spark.registry import ROWS_ONLY_BY_DESIGN
+    for mod in MODULES:
+        merged.merge(importlib.import_module(f"{__name__}.{mod}").REG)
 
     no_oracle = set(merged.queries) - set(merged.oracles)
     if no_oracle != set(ROWS_ONLY_BY_DESIGN):
@@ -174,17 +49,4 @@ def build_registry() -> QueryRegistry:
             f"undocumented={sorted(no_oracle - set(ROWS_ONLY_BY_DESIGN))} "
             f"stale={sorted(set(ROWS_ONLY_BY_DESIGN) - no_oracle)}"
         )
-    # tail: ungraded keys first (they carry the most risk), then
-    # oldest driver grade first — bounded staleness by construction
-    grades = _latest_grades()
-    pinned = set(GRADED_FIRST)
-    tail = sorted(
-        (k for k in merged.queries if k not in pinned),
-        key=lambda k: (grades.get(k, -1), k),
-    )
-    ordered = QueryRegistry()
-    for key in (*GRADED_FIRST, *tail):
-        ordered.queries[key] = merged.queries[key]
-        if key in merged.oracles:
-            ordered.oracles[key] = merged.oracles[key]
-    return ordered
+    return merged

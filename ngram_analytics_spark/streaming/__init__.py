@@ -162,16 +162,9 @@ def stream_state_partitions(spark: SparkSession) -> int:
     leaderboard 2.93->2.25 s, lww 1.85->1.60, reach 1.82->1.24 at 16
     partitions vs 32; processing splits move the same way).
 
-    The default stays CORES-DERIVED (defaultParallelism // 2), never
+    The count stays CORES-DERIVED (defaultParallelism // 2), never
     a constant, so an 8-core driver run gets 4 and a 1000-core
-    cluster gets 500. Deployments whose per-key state is large (the
-    regime where state volume, not trigger overhead, sizes the store)
-    should raise it via ``NAS_STREAM_STATE_PARTITIONS``."""
-    import os
-
-    env = os.environ.get("NAS_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    cluster gets 500."""
     return max(1, spark.sparkContext.defaultParallelism // 2)
 
 
@@ -281,74 +274,6 @@ def session_counts(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("s_start"),
             "n",
         )
-    )
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf for its state
-    protocol (driver-side worker imports StateMessage_pb2); absent in
-    minimal environments, so the operator is capability-gated."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_max_per_key(events: DataFrame) -> DataFrame:
-    """Arbitrary stateful streaming op on the Spark 4 API:
-    transformWithStateInPandas with a ValueState holding the running
-    max `value` per user. The older applyInPandasWithState twin is
-    :func:`running_user_counts`; this is the successor API (typed
-    state, timers, state schema evolution) and the one to extend for
-    session-izing / dedup state at 100 TB.
-
-    Raises RuntimeError when the environment lacks protobuf (see
-    :func:`tws_available`) — callers gate on that, tests skip.
-    """
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires google.protobuf; "
-            "gate calls on streaming.tws_available()"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-
-    class RunningMax(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState("mx", "mx double")
-
-        def handleInputRows(self, key, rows, timer_values):
-            mx = (
-                self._state.get()[0]
-                if self._state.exists()
-                else float("-inf")
-            )
-            n = 0
-            for pdf in rows:
-                n += len(pdf)
-                mx = max(mx, float(pdf["value"].max()))
-            self._state.update((mx,))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "mx": [mx], "n": [n]}
-            )
-
-        def close(self):
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningMax(),
-        outputStructType="user_id bigint, mx double, n bigint",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

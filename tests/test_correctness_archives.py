@@ -23,9 +23,9 @@ LINT_FROM_ROUND = 13
 
 def _diffcheck_vacuous_ok() -> frozenset:
     """The single source of truth for the empty-result allowlist is
-    tools/diffcheck.VACUOUS_OK — import it (tools/ is not a package;
-    the test_docs graded_window convention) so the run-time lint and
-    this archive lint cannot drift."""
+    tools/diffcheck.VACUOUS_OK — load tools/diffcheck.py by path with
+    importlib (tools/ is not a package) so the run-time lint and this
+    archive lint cannot drift."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(

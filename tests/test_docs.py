@@ -5,8 +5,7 @@ landed in an end-of-round snapshot commit with a registry entry but NO
 SURVEY.md §2 row and no bench extended entry — meaning the driver could
 grade a key the judge had no documentation trail for.  These lints make
 that impossible: every registry key must appear in SURVEY.md §2 (as a
-backticked `q_...` anchor) and every GRADED_FIRST key must exist in the
-registry (the registry builder already enforces the reverse direction).
+backticked `q_...` anchor).
 """
 
 from __future__ import annotations
@@ -14,7 +13,7 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from ngram_analytics_spark.queries import GRADED_FIRST, build_registry
+from ngram_analytics_spark.queries import build_registry
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -38,75 +37,6 @@ def test_every_bench_extended_key_is_registered():
     reg = build_registry()
     unknown = sorted(set(bench.EXTENDED) - set(reg.queries))
     assert not unknown, f"bench extended keys not in registry: {unknown}"
-
-
-def test_graded_first_keys_are_unique():
-    assert len(GRADED_FIRST) == len(set(GRADED_FIRST))
-
-
-def test_graded_first_matches_generator():
-    """VERDICT r11 item 6: the graded window is GENERATED, not
-    hand-maintained — tools/graded_window.py derives it from (a) keys
-    with no driver CORRECTNESS row, (b) keys whose function/oracle
-    text changed since the round base, (c) the stalest-graded tail.
-    This pin makes 'edited a query, forgot the window' a test failure
-    instead of a straggler next round (the r10 4-key incident)."""
-    import importlib.util
-    import subprocess
-
-    import pytest
-
-    try:
-        subprocess.run(
-            ["git", "rev-parse", "HEAD"],
-            cwd=REPO, capture_output=True, check=True,
-        )
-    except (subprocess.CalledProcessError, FileNotFoundError):
-        pytest.skip("not a git checkout — window generator needs git")
-
-    spec = importlib.util.spec_from_file_location(
-        "graded_window", REPO / "tools" / "graded_window.py"
-    )
-    gw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(gw)
-    if gw.newest_archive_untracked():
-        pytest.skip(
-            "post-grade state: the newest CORRECTNESS_r*.json is not "
-            "committed yet, so the committed GRADED_FIRST predates it "
-            "by construction — regenerate at round open (VERDICT r12 "
-            "item 1)"
-        )
-    want = gw.compute_window()
-    assert tuple(GRADED_FIRST) == want, (
-        "GRADED_FIRST is stale — regenerate with "
-        "`python tools/graded_window.py` and paste the tuple into "
-        "ngram_analytics_spark/queries/__init__.py"
-    )
-
-
-def test_graded_window_attribution_follows_aliases(tmp_path):
-    """VERDICT r12 item 7: a helper re-exported under another name
-    (``from m import foo as bar`` / ``bar = foo``) must attribute a
-    change to ``foo`` through to query text that references ``bar``,
-    transitively — plain text matching on ``foo`` alone misses it."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "graded_window", REPO / "tools" / "graded_window.py"
-    )
-    gw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(gw)
-
-    mod = tmp_path / "reexport.py"
-    mod.write_text(
-        "from ngram_analytics_spark.operators.dedup import foo as bar\n"
-        "baz = bar\n"
-        "unrelated = other_name\n"
-    )
-    got = gw.expand_aliases({"foo"}, [str(mod)])
-    assert got == {"foo", "bar", "baz"}  # chained, fixpoint-closed
-    # a name with no alias edges passes through untouched
-    assert gw.expand_aliases({"nope"}, [str(mod)]) == {"nope"}
 
 
 def test_no_double_division_truncate_cast():

@@ -37,15 +37,30 @@ def test_query_matches_oracle(spark, duck, registry, name):
     assert len(srows) > 0, f"{name}: oracle query returned 0 rows (weak test)"
 
 
-def test_graded_first_window_is_north_star(registry):
-    """The differential driver grades the first 50 registry keys in
-    iteration order; pin that window to the declared GRADED_FIRST list
-    so an accidental merge-order change can't silently rotate the
-    flagship / LLM-pipeline operators out of certification."""
-    from ngram_analytics_spark.queries import GRADED_FIRST
+def test_registry_order_is_merge_order(registry, monkeypatch):
+    """The registry's key order is a pure function of the code: each
+    query module's keys in registration order, modules in merge order,
+    the same on every call. Building it opens no file and starts no
+    subprocess."""
+    import builtins
+    import importlib
+    import subprocess
 
-    assert len(GRADED_FIRST) == 50
-    assert list(registry.queries)[:50] == list(GRADED_FIRST)
+    from ngram_analytics_spark import queries as Q
+
+    want = [
+        key
+        for mod in Q.MODULES
+        for key in importlib.import_module(f"{Q.__name__}.{mod}").REG.queries
+    ]
+    assert list(registry.queries) == want
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("build_registry opened a file or a subprocess")
+
+    monkeypatch.setattr(builtins, "open", forbidden)
+    monkeypatch.setattr(subprocess, "Popen", forbidden)
+    assert list(Q.build_registry().queries) == want
 
 
 @pytest.mark.parametrize("name", _keys())

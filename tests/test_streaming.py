@@ -104,29 +104,6 @@ def test_session_window_batch_stream_parity(spark):
     assert len(got) > 0
 
 
-def test_transform_with_state_running_max(spark):
-    """Spark 4 transformWithStateInPandas surface: per-user running max
-    via ValueState. Skips where the protobuf state protocol isn't
-    installed (the operator is capability-gated)."""
-    import pytest
-
-    from ngram_analytics_spark import streaming as S
-    from tests.conftest import SF_SMOKE
-
-    if not S.tws_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            S.running_max_per_key(
-                S.read_events_stream(spark, SF_SMOKE)
-            )
-        pytest.skip("google.protobuf not installed in this environment")
-    out = S.running_max_per_key(S.read_events_stream(spark, SF_SMOKE))
-    S.run_to_memory(out, "tws_max", output_mode="update")
-    rows = spark.sql(
-        "SELECT user_id, max(mx) mx FROM tws_max GROUP BY user_id"
-    ).collect()
-    assert len(rows) > 0
-
-
 def test_read_events_stream_adapts_to_both_ts_layouts(spark, tmp_path):
     """The driver has shipped events.ts as TIMESTAMP(NANOS) (surfaced
     long) and as TIMESTAMP(MICROS); the batch loader and the stream
