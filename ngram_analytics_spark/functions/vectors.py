@@ -5,15 +5,11 @@ Arrays are cast to double first so both Spark and the DuckDB oracle
 fold the same doubles in the same order, making results bit-identical
 (see functions.deterministic rationale).
 
-Performance: the generic path uses higher-order ``aggregate`` folds,
-which Spark evaluates *interpreted* (no whole-stage codegen) — fine for
-one norm per row, ruinous inside an all-pairs join. When the dimension
-is known (``dim=``), :func:`dot` and :func:`l2_norm` emit an unrolled
-left-associated ``a[1]*b[1] + a[2]*b[2] + ...`` chain instead: same
-IEEE operation order as the sequential fold (``0.0 + t1`` is exact), so
-results are bit-identical, but the expression compiles into whole-stage
-codegen — ~10x faster in the pair-join hot path. Norms should be
-precomputed once per side before a join (operators.similarity does).
+Performance: :func:`dot` and :func:`l2_norm` are higher-order
+``aggregate`` folds — one kernel for every dimension, bit-identical to
+the oracle's ``list_sum``. Spark evaluates the fold interpreted, so
+the cast and the norm belong below a join, once per row, never per
+pair (operators.similarity projects each side that way).
 
 At 100 TB the brute-force cosine path is only used after an LSH/IVF
 prefilter (operators.similarity); these expressions are the re-rank
@@ -30,21 +26,10 @@ def _dbl(c: Column) -> Column:
     return c.cast("array<double>")
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product of two equal-length array columns (double math).
-
-    With ``dim``: unrolled codegen-able chain (bit-identical to the
-    fold — left-associated adds starting from exact ``0.0 + t1``).
-    IMPORTANT: with ``dim`` the inputs must already be
-    ``array<double>`` (cast ONCE per row in the side projection —
-    casting inside the unrolled chain re-casts the whole array per
-    term and destroys performance).
-    """
-    if dim is not None:
-        out = F.element_at(a, 1) * F.element_at(b, 1)
-        for i in range(2, dim + 1):
-            out = out + F.element_at(a, i) * F.element_at(b, i)
-        return out
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two equal-length array columns (double math):
+    a left-associated fold from ``0.0``, the order the oracle's
+    ``list_sum`` uses."""
     return F.aggregate(
         F.zip_with(_dbl(a), _dbl(b), lambda x, y: x * y),
         F.lit(0.0),
@@ -52,27 +37,21 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def l2_norm(a: Column, dim: int | None = None) -> Column:
-    """L2 norm; with ``dim`` the input must already be array<double>
-    (see :func:`dot`)."""
-    if dim is not None:
-        out = F.element_at(a, 1) * F.element_at(a, 1)
-        for i in range(2, dim + 1):
-            out = out + F.element_at(a, i) * F.element_at(a, i)
-        return F.sqrt(out)
+def l2_norm(a: Column) -> Column:
+    """L2 norm (double math, same fold order as :func:`dot`)."""
     return F.sqrt(
         F.aggregate(_dbl(a), F.lit(0.0), lambda acc, x: acc + x * x)
     )
 
 
-def cosine_sim(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine_sim(a: Column, b: Column) -> Column:
     """Cosine similarity; NULL-safe on zero vectors (returns NULL).
 
     For join hot paths prefer :func:`cosine_from_parts` with per-side
     precomputed norms — same value, norms computed once per row.
     """
-    denom = l2_norm(a, dim) * l2_norm(b, dim)
-    return F.when(denom != 0, dot(a, b, dim) / denom)
+    denom = l2_norm(a) * l2_norm(b)
+    return F.when(denom != 0, dot(a, b) / denom)
 
 
 def cosine_from_parts(dot_col: Column, norm_a: Column, norm_b: Column) -> Column:

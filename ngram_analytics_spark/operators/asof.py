@@ -11,10 +11,6 @@ l.ts)`` is many-to-many (every left row pairs with ALL earlier right
 rows) — quadratic per key. The union-merge is one shuffle per side on
 the key, a per-partition sort, and a running ``last`` — linear, skew
 behaves like any window op (salt hot keys upstream if needed).
-
-An alternative per-group ``applyInPandas`` + ``pd.merge_asof`` path is
-provided for very wide right sides where carrying nulled columns
-through the union is wasteful.
 """
 
 from __future__ import annotations
@@ -279,35 +275,3 @@ def _asof_nearest(
         "_k", "_t", "_side", "_rt", "_ord"
     )
 
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_time: str,
-    right_time: str,
-    right_values: list[str],
-) -> DataFrame:
-    """Per-key ``pd.merge_asof`` via cogrouped applyInPandas (Arrow
-    batches). Equivalent semantics to :func:`asof_join`; useful when the
-    right side is wide."""
-    import pandas as pd
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in left.schema.fields
-    ) + ", " + ", ".join(
-        f"{c} {dict(right.dtypes)[c]}" for c in right_values
-    )
-
-    def merge(ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        ldf = ldf.sort_values(left_time)
-        rdf = rdf.sort_values(right_time)[[right_time, *right_values]]
-        return pd.merge_asof(
-            ldf, rdf, left_on=left_time, right_on=right_time, direction="backward"
-        ).drop(columns=[right_time] if right_time != left_time else [])
-
-    return (
-        left.groupBy(key)
-        .cogroup(right.groupBy(F.col(key)))
-        .applyInPandas(lambda l, r: merge(l, r), schema=out_schema)
-    )

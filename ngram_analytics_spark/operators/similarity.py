@@ -7,8 +7,8 @@ Scale paths:
   assigned to their nearest centroid once (one broadcast join), queries
   probe only the ``n_probe`` nearest cells — corpus-side work drops by
   ~n_cells/n_probe. All DataFrame ops, centroid set broadcast.
-- Random-hyperplane LSH (MLlib BucketedRandomProjectionLSH) for
-  approx joins when queries are not few.
+- Random-projection LSH banding (:func:`rp_banded_edges`, md5-literal
+  hyperplanes, bounded bucket fanout) for all-pairs edges at scale.
 
 Hot-path discipline: the float->double cast and the norm are computed
 ONCE per input row (below the join, O(rows)), never per pair; the
@@ -25,33 +25,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ngram_analytics_spark.functions.deterministic import round4det
-from ngram_analytics_spark.operators import combo_pairs
+from ngram_analytics_spark.operators import combo_pairs, spread
 from ngram_analytics_spark.functions.vectors import (
     cosine_from_parts,
     dot,
     l2_norm,
 )
 
-# Fold kernel (dim=None) is the default: it matches the DuckDB oracle's
-# list_sum fold bit-for-bit and, with norms precomputed per side and the
-# stream side repartitioned across cores, outperforms the unrolled
-# codegen chain (which overflows the 64KB codegen budget at dim=64 and
-# falls back to slower interpreted evaluation).
-DEFAULT_DIM = None
-
-
-def _parallelize(df: DataFrame) -> DataFrame:
-    """Ensure the stream side of a nested-loop pair join has at least
-    one partition per core — tiny dimension tables otherwise serialize
-    the whole O(n^2) scoring onto a single task."""
-    target = df.sparkSession.sparkContext.defaultParallelism * 2
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def _side(df: DataFrame, id_col: str, vec_col: str, out_id: str,
-          out_vec: str, out_norm: str, dim: int | None) -> DataFrame:
+          out_vec: str, out_norm: str) -> DataFrame:
     """Project one join side to (id, vec-as-double, norm) — the cast and
     the norm are computed ONCE per row, below the join (the join's
     per-pair projection then only references materialized attributes)."""
@@ -61,7 +43,7 @@ def _side(df: DataFrame, id_col: str, vec_col: str, out_id: str,
     ).select(
         out_id,
         out_vec,
-        l2_norm(F.col(out_vec), dim).alias(out_norm),
+        l2_norm(F.col(out_vec)).alias(out_norm),
     )
 
 
@@ -71,7 +53,6 @@ def brute_force_knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    dim: int | None = DEFAULT_DIM,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (excluding self-matches).
 
@@ -80,14 +61,14 @@ def brute_force_knn(
     (small) query set, and only k rows per (partition, query) survive
     the window's group-limit pushdown.
     """
-    q = _side(queries, id_col, vec_col, "query_id", "_qv", "_qn", dim)
-    c = _parallelize(_side(corpus, id_col, vec_col, "neighbor_id", "_cv", "_cn", dim))
+    q = _side(queries, id_col, vec_col, "query_id", "_qv", "_qn")
+    c = spread(_side(corpus, id_col, vec_col, "neighbor_id", "_cv", "_cn"), factor=2)
     scored = c.join(
         F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
     ).withColumn(
         "_cos",
         cosine_from_parts(
-            dot(F.col("_qv"), F.col("_cv"), dim), F.col("_qn"), F.col("_cn")
+            dot(F.col("_qv"), F.col("_cv")), F.col("_qn"), F.col("_cn")
         ),
     )
     w = W.partitionBy("query_id").orderBy(
@@ -108,8 +89,6 @@ def ivf_knn(
     k: int = 5,
     n_cells: int = 20,
     n_probe: int = 3,
-    centroid_stride: int | None = None,
-    dim: int | None = DEFAULT_DIM,
     centroid_pick: str = "xxhash64",
 ) -> DataFrame:
     """Approximate top-k via IVF: deterministic coarse quantizer.
@@ -121,34 +100,22 @@ def ivf_knn(
     ``centroid_pick="xxhash64"`` is the fast JVM default;
     ``"md5"`` uses the md5-hex-prefix integer, which DuckDB can
     reproduce bit-for-bit — the SQL-certifiable pick
-    (q_sim_ann_ivf_exact). Pass ``centroid_stride`` to reproduce the
-    legacy ``id % stride == 0`` selection; swap in MLlib KMeans
-    centroids for better recall when training cost is acceptable.
+    (q_sim_ann_ivf_exact). Swap in MLlib KMeans centroids for better
+    recall when training cost is acceptable. Every cosine is the fold
+    kernel of functions/vectors.
     """
-    if centroid_stride is not None and centroid_stride <= 0:
-        # id % 0 is NULL in Spark SQL — the filter would silently drop
-        # every row and return an empty result; fail loudly instead.
-        raise ValueError(
-            f"centroid_stride must be positive, got {centroid_stride}"
-        )
     if centroid_pick not in ("xxhash64", "md5"):
         raise ValueError(f"unknown centroid_pick: {centroid_pick!r}")
-    if centroid_stride is not None:
-        cent_src = corpus.filter((F.col(id_col) % centroid_stride) == 0)
-        cent_order = [F.col(id_col).asc()]
+    if centroid_pick == "md5":
+        hash_col = F.conv(
+            F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
+            16,
+            10,
+        ).cast("long")
     else:
-        cent_src = corpus
-        if centroid_pick == "md5":
-            hash_col = F.conv(
-                F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("long")
-        else:
-            hash_col = F.xxhash64(F.col(id_col))
-        cent_order = [hash_col.asc(), F.col(id_col).asc()]
+        hash_col = F.xxhash64(F.col(id_col))
     centroids = (
-        cent_src.orderBy(*cent_order)
+        corpus.orderBy(hash_col.asc(), F.col(id_col).asc())
         .limit(n_cells)
         .select(
             F.col(id_col).alias("cell_id"),
@@ -159,8 +126,8 @@ def ivf_knn(
     def nearest_cells(df: DataFrame, side_id: str, vcol: str, top: int) -> DataFrame:
         scored = df.join(F.broadcast(centroids)).withColumn(
             "_csim",
-            dot(F.col(vcol), F.col("_centv"), dim)
-            / (l2_norm(F.col(vcol), dim) * l2_norm(F.col("_centv"), dim)),
+            dot(F.col(vcol), F.col("_centv"))
+            / (l2_norm(F.col(vcol)) * l2_norm(F.col("_centv"))),
         )
         w = W.partitionBy(side_id).orderBy(F.col("_csim").desc(), F.col("cell_id"))
         return (
@@ -169,18 +136,19 @@ def ivf_knn(
             .drop("_centv", "_csim", "_crn")
         )
 
-    # _parallelize the corpus-side assignment (r15): the n_cells-way
-    # cosine scoring runs map-side below the rank window's exchange,
-    # so a single-split scan otherwise carries ALL of it on one task
+    # spread the corpus-side assignment (r15): the n_cells-way cosine
+    # scoring runs map-side below the rank window's exchange, so a
+    # single-split scan otherwise carries ALL of it on one task
     # (stageprof: 1.78 s of q_sim_ann_ivf_exact's 4.75 s wall at
     # sf0.1) — the same guard brute_force_knn has carried since r10;
     # no-op on many-split inputs, values rank-deterministic.
     assigned = nearest_cells(
-        _parallelize(
+        spread(
             corpus.select(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(vec_col).cast("array<double>").alias("_cv"),
-            )
+            ),
+            factor=2,
         ),
         "neighbor_id",
         "_cv",
@@ -201,9 +169,9 @@ def ivf_knn(
         .withColumn(
             "_cos",
             cosine_from_parts(
-                dot(F.col("_qv"), F.col("_cv"), dim),
-                l2_norm(F.col("_qv"), dim),
-                l2_norm(F.col("_cv"), dim),
+                dot(F.col("_qv"), F.col("_cv")),
+                l2_norm(F.col("_qv")),
+                l2_norm(F.col("_cv")),
             ),
         )
     )
@@ -222,7 +190,6 @@ def similarity_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     min_cos: float = 0.35,
-    dim: int | None = DEFAULT_DIM,
 ) -> DataFrame:
     """All pairs above a cosine threshold (exact all-pairs self-join).
 
@@ -234,15 +201,15 @@ def similarity_pairs(
     across the fold kernel, the BLAS kernel and the SQL oracle even
     when their summation orders differ in the last ulp.
     """
-    a = _parallelize(_side(corpus, id_col, vec_col, "id_a", "_va", "_na", dim))
-    b = _side(corpus, id_col, vec_col, "id_b", "_vb", "_nb", dim)
+    a = spread(_side(corpus, id_col, vec_col, "id_a", "_va", "_na"), factor=2)
+    b = _side(corpus, id_col, vec_col, "id_b", "_vb", "_nb")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn(
             "cos_sim",
             round4det(
                 cosine_from_parts(
-                    dot(F.col("_va"), F.col("_vb"), dim),
+                    dot(F.col("_va"), F.col("_vb")),
                     F.col("_na"),
                     F.col("_nb"),
                 )
@@ -554,7 +521,7 @@ def rp_signatures(
             F.col(id_col).cast("long").alias("id"),
             F.col(vec_col).cast("array<double>").alias("v"),
         )
-        .withColumn("_nrm", l2_norm(F.col("v"), None))
+        .withColumn("_nrm", l2_norm(F.col("v")))
         .filter((F.col("_nrm") > 0) & (F.size("v") == dim))
     )
     wm = F.from_json(F.lit(json.dumps(signs)), "array<array<double>>")
@@ -743,7 +710,7 @@ def rp_banded_edges(
             F.col(id_col).cast("long").alias("id"),
             F.col(vec_col).cast("array<double>").alias("v"),
         )
-        .withColumn("_nrm", l2_norm(F.col("v"), None))
+        .withColumn("_nrm", l2_norm(F.col("v")))
         .filter(F.col("_nrm") > 0)
     )
     va = base.select(
@@ -757,7 +724,7 @@ def rp_banded_edges(
         F.col("_nrm").alias("_nb"),
     )
     cos = cosine_from_parts(
-        dot(F.col("_va"), F.col("_vb"), None), F.col("_na"), F.col("_nb")
+        dot(F.col("_va"), F.col("_vb")), F.col("_na"), F.col("_nb")
     )
     return (
         cand.join(va, "id_a")
@@ -829,38 +796,3 @@ def cosine_edges(
         dim=dim,
     )
 
-
-def lsh_similarity_join(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold_l2: float = 10.0,
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate pair join via random-hyperplane bucketing (MLlib
-    BucketedRandomProjectionLSH over the L2 metric)."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = corpus.select(
-        F.col(id_col), array_to_vector(F.col(vec_col).cast("array<double>")).alias("_v")
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="_v",
-        outputCol="_h",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    model = lsh.fit(vecs)
-    joined = model.approxSimilarityJoin(vecs, vecs, threshold_l2, distCol="l2_dist")
-    return (
-        joined.filter(F.col(f"datasetA.{id_col}") < F.col(f"datasetB.{id_col}"))
-        .select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            round4det(F.col("l2_dist")).alias("l2_dist"),
-        )
-    )

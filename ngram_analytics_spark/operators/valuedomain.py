@@ -26,7 +26,7 @@ so this file is north-star surface, not a port).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -228,12 +228,3 @@ def grouped_ordered_cumsum(
         .drop("_b", "_off", "_run")
     )
 
-
-def rank_select_value(
-    cum_df: DataFrame, group: str, value: str, k: Column, alias: str
-) -> Column:
-    """Aggregate expression choosing the value at sorted position
-    ``k`` (1-based) within each group: the smallest value whose
-    inclusive cumulative mass reaches ``k``.  Use inside
-    ``cum_df.groupBy(group).agg(...)``."""
-    return F.min(F.when(F.col("cum") >= k, F.col(value))).alias(alias)

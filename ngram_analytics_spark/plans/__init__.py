@@ -25,10 +25,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df)
 
 
-def uses_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in physical_plan(df)
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters clause of the first FileScan (empty if none;
     plan lines may be truncated, so capture up to ']' or line end)."""

@@ -4368,6 +4368,10 @@ def q_ml_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     below the join, and the per-query rank window takes the
     WindowGroupLimit pushdown ({k} rows per map task per query).
 
+    Kernel: the dot product and norms are the functions/vectors fold,
+    which reads every element whatever the embedding width — the
+    oracle's ``len(embedding)`` range.
+
     Determinism: cosine ranks on the 4-dp-rounded value with
     neighbor-id tie-break (the knn discipline)."""
     from ngram_analytics_spark.functions.vectors import (
@@ -4383,7 +4387,7 @@ def q_ml_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("_ql"),
     )
     q = q.select(
-        "query_id", "_qv", "_ql", l2_norm(F.col("_qv"), 64).alias("_qn")
+        "query_id", "_qv", "_ql", l2_norm(F.col("_qv")).alias("_qn")
     )
     # spread: the corpus side carries the scoring work, and the bench
     # file is a single row group — without it the whole BNLJ scores on
@@ -4399,7 +4403,7 @@ def q_ml_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         "_cv",
         "neg_label",
-        l2_norm(F.col("_cv"), 64).alias("_cn"),
+        l2_norm(F.col("_cv")).alias("_cn"),
     )
     scored = c.join(
         F.broadcast(q),
@@ -4409,7 +4413,7 @@ def q_ml_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_cos",
         round4det(
             cosine_from_parts(
-                dot(F.col("_qv"), F.col("_cv"), 64),
+                dot(F.col("_qv"), F.col("_cv")),
                 F.col("_qn"),
                 F.col("_cn"),
             )
@@ -6167,11 +6171,6 @@ def q_dedup_semantic(
     # Runs on the UN-spread scan (count/distinct are partitioning-
     # invariant; skipping the repartition shuffle saves a stage) and
     # HLLs a per-row xxhash64 instead of the raw 64-float array.
-    # NOTE (r13, measured): dim-UNROLLED kernels (dot/l2_norm dim=)
-    # were tried here and REGRESSED 17.5 -> 49.6 s at derived-sf1 —
-    # the 64-term element_at chains blow past the codegen method
-    # budget inside this query's join-heavy operators and fall back
-    # to per-term interpreted eval; the aggregate fold stays.
     emb_base = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",

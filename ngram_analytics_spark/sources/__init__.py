@@ -102,28 +102,17 @@ def read_binary_files(
     spark: SparkSession,
     path: str,
     glob: str | None = None,
-    max_bytes_per_partition: str | None = None,
 ) -> DataFrame:
     """Opaque-blob reader for multimodal payloads (image/audio/video
     files) via Spark's built-in ``binaryFile`` source.
 
     Yields (path, modificationTime, length, content: binary) — the
     typed-metadata + binary-column shape operators.multimodal consumes.
-    ``maxPartitionBytes`` bounds per-task memory: at 100 TB of blobs the
-    decode UDF sees Arrow batches of whole files, so partition size —
-    not row count — is the OOM lever.
-
-    CAVEAT: ``spark.sql.files.maxPartitionBytes`` is a SESSION conf
-    read at physical-planning time, so passing ``max_bytes_per_
-    partition`` changes task sizing for every scan planned afterwards,
-    not just this one (a per-reader option does not exist for this
-    knob). It is therefore only set when explicitly requested; restore
-    the previous value after the blob job if the session continues.
+    ``glob`` keeps only file names matching the pattern. Partition size,
+    not row count, bounds the decode step's memory; it is the session's
+    ``spark.sql.files.maxPartitionBytes``, a deployment setting this
+    reader leaves alone.
     """
-    if max_bytes_per_partition is not None:
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes", max_bytes_per_partition
-        )
     reader = spark.read.format("binaryFile")
     if glob:
         reader = reader.option("pathGlobFilter", glob)

@@ -184,3 +184,54 @@ def test_every_power_sum_documents_its_headroom():
         "power-sum aggregates with neither 128-bit accumulation nor a "
         f"headroom docstring note: {undocumented}"
     )
+
+
+def test_every_public_helper_has_a_caller():
+    """Dead-helper lint: every public top-level function of the
+    operator, function, plan, source and streaming layers (and of
+    ``catalog`` and ``session``) must be referenced somewhere other
+    than its own ``def`` — by the package, the tests, ``tools/``,
+    ``perfbench/`` or ``__spark_entry__.py``.  A helper nothing calls
+    is an untested second path that still has to be read and kept in
+    step; delete it instead.  References are AST names, attributes and
+    import aliases, so a mention in a docstring or comment does not
+    count, and neither does a recursive call inside the helper."""
+    import ast
+    from collections import Counter
+
+    pkg = REPO / "ngram_analytics_spark"
+    scoped = [
+        p
+        for d in ("operators", "functions", "plans", "sources", "streaming")
+        for p in sorted((pkg / d).rglob("*.py"))
+    ] + [pkg / "catalog.py", pkg / "session.py"]
+    searched = (
+        sorted(pkg.rglob("*.py"))
+        + sorted((REPO / "perfbench").rglob("*.py"))
+        + sorted((REPO / "tools").rglob("*.py"))
+        + sorted((REPO / "tests").rglob("*.py"))
+        + [REPO / "__spark_entry__.py"]
+    )
+
+    def names(node: ast.AST) -> list[str]:
+        out = []
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.append(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.append(n.attr)
+            elif isinstance(n, ast.alias):
+                out.append(n.name.rsplit(".", 1)[-1])
+        return out
+
+    trees = {p: ast.parse(p.read_text()) for p in searched}
+    uses = Counter(n for tree in trees.values() for n in names(tree))
+    dead = [
+        f"{path.relative_to(REPO)}:{node.name}"
+        for path in scoped
+        for node in trees[path].body
+        if isinstance(node, ast.FunctionDef)
+        and not node.name.startswith("_")
+        and uses[node.name] == names(node).count(node.name)
+    ]
+    assert not dead, f"public helpers nothing references: {dead}"

@@ -696,20 +696,6 @@ def test_cosine_threshold_applies_to_rounded_value(spark):
     assert gemm == expect
 
 
-def test_ivf_rejects_nonpositive_stride(spark):
-    """centroid_stride=0 would make `id % stride` NULL in Spark SQL and
-    silently return an empty result — must raise instead."""
-    import pytest
-
-    from ngram_analytics_spark.catalog import load
-    from ngram_analytics_spark.operators.similarity import ivf_knn
-    from tests.conftest import SF_SMOKE
-
-    emb = load(spark, SF_SMOKE, "embeddings")
-    with pytest.raises(ValueError, match="centroid_stride"):
-        ivf_knn(emb, emb.limit(2), centroid_stride=0)
-
-
 def test_cosine_edges_lsh_skips_zero_norm_vectors(spark):
     """A zero vector has no direction: the LSH path must drop it before
     normalization (divide-by-zero would NULL the unit vector and crash

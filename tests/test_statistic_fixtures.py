@@ -648,6 +648,52 @@ def test_hard_negatives_closed_form(spark, tmp_path):
     assert set(byq) == set(range(8))
 
 
+def test_hard_negatives_any_embedding_width_matches_oracle(spark, tmp_path):
+    """The cosine kernel reads every element of a vector whatever its
+    width, like the oracle's ``len(embedding)`` range: on 3-d
+    embeddings the query must run and match its DuckDB oracle (a
+    kernel unrolled to a fixed 64 elements fails here with
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT)."""
+    import duckdb
+
+    from ngram_analytics_spark.queries import build_registry
+    from ngram_analytics_spark.testing import (
+        compare,
+        duck_result,
+        spark_result,
+    )
+
+    rows = [
+        (
+            i,
+            [
+                float((i * 7) % 11) - 4.5,
+                float((i * 3) % 13) - 5.5,
+                float((i * 5) % 17) - 7.5,
+            ],
+            i % 3,
+        )
+        for i in range(24)
+    ]
+    sf = _write(
+        spark,
+        tmp_path,
+        "embeddings",
+        rows,
+        "vec_id long, embedding array<float>, label int",
+    )
+    reg = build_registry()
+    scols, srows = spark_result(reg.queries["q_ml_hard_negatives"](spark, sf))
+    assert len(srows) == 10 * 5
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM"
+        f" read_parquet('{sf}/embeddings.parquet/*.parquet')"
+    )
+    dcols, drows = duck_result(con, reg.oracles["q_ml_hard_negatives"])
+    assert not compare(scols, srows, dcols, drows)
+
+
 # ----------------------------------------------------- ANN recall
 
 
