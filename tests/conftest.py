@@ -28,6 +28,34 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def registry():
+    from ngram_analytics_spark.queries import build_registry
+
+    return build_registry()
+
+
+@pytest.fixture(scope="session")
+def smoke_df(spark, registry):
+    """``smoke_df(key)``: the registered query's DataFrame over the
+    smoke corpus, built on first use and shared for the session.
+
+    Building a key's DataFrame in Python is most of the cost of the
+    whole-registry schema check and plan lints, and they only read
+    schemas and plans, so one build per key serves them all. Nothing
+    runs these DataFrames: the lints read plans as planned, and the
+    cache holds no broadcast or shuffle state. The oracle test builds
+    and runs its own."""
+    built = {}
+
+    def get(name):
+        if name not in built:
+            built[name] = registry.queries[name](spark, SF_SMOKE)
+        return built[name]
+
+    return get
+
+
+@pytest.fixture(scope="session")
 def duck():
     import duckdb
 

@@ -17,13 +17,6 @@ def _keys():
     return sorted(build_registry().queries)
 
 
-@pytest.fixture(scope="session")
-def registry():
-    from ngram_analytics_spark.queries import build_registry
-
-    return build_registry()
-
-
 @pytest.mark.parametrize("name", _keys())
 def test_query_matches_oracle(spark, duck, registry, name):
     fn = registry.queries[name]
@@ -64,13 +57,13 @@ def test_registry_order_is_merge_order(registry, monkeypatch):
 
 
 @pytest.mark.parametrize("name", _keys())
-def test_query_schema_is_scalar_only(spark, registry, name):
+def test_query_schema_is_scalar_only(smoke_df, name):
     """The driver's pandas canonicalizer cannot hash composite cells
     (array/map/struct columns crash its sort — round-1 q_agg_collect).
     Every graded query must therefore emit scalar-typed columns only."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    df = registry.queries[name](spark, SF_SMOKE)
+    df = smoke_df(name)
     bad = [
         f.name
         for f in df.schema.fields

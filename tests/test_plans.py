@@ -490,18 +490,16 @@ NESTED_LOOP_OK = {
 }
 
 
-def test_no_unexpected_nested_loop_plans(spark):
+def test_no_unexpected_nested_loop_plans(registry, smoke_df):
     """Global plan lint: no declared query may silently plan a
     BroadcastNestedLoopJoin or CartesianProduct — at 100 TB those are
     O(n*m) cliffs. Quadratic-by-design kernels are whitelisted above;
     adding a query to the whitelist is a deliberate scale decision."""
-    from ngram_analytics_spark.queries import build_registry
-
     offenders = {}
-    for name, fn in build_registry().queries.items():
+    for name in registry.queries:
         if name in NESTED_LOOP_OK:
             continue
-        plan = P.physical_plan(fn(spark, SF_SMOKE))
+        plan = P.physical_plan(smoke_df(name))
         hits = [
             op
             for op in ("BroadcastNestedLoopJoin", "CartesianProduct")
@@ -512,24 +510,22 @@ def test_no_unexpected_nested_loop_plans(spark):
     assert not offenders, offenders
 
 
-def test_no_unpartitioned_windows_in_graded_plans(spark):
+def test_no_unpartitioned_windows_in_graded_plans(registry, smoke_df):
     """Global plan lint: no declared query may plan a window over an
     empty PARTITION BY — WindowExec would move the window's whole input
     to one task ("Moving all data to a single partition"), serializing
     at scale. Global rankings must use the bucket-rank + offset pattern
     (see q_sort_nulls) instead. No whitelist: there is no graded plan
     for which an unpartitioned unbounded-input window is acceptable."""
-    from ngram_analytics_spark.queries import build_registry
-
     offenders = {}
-    for name, fn in build_registry().queries.items():
-        n = P.unpartitioned_window_count(fn(spark, SF_SMOKE))
+    for name in registry.queries:
+        n = P.unpartitioned_window_count(smoke_df(name))
         if n:
             offenders[name] = n
     assert not offenders, offenders
 
 
-def test_no_tiny_domain_fact_windows(spark):
+def test_no_tiny_domain_fact_windows(registry, smoke_df):
     """Global plan lint (VERDICT r5 "What's wrong" §2): no declared
     query may run a window whose whole PARTITION BY is tiny-domain fact
     columns (l_returnflag & co.) over un-aggregated fact rows — that
@@ -538,11 +534,9 @@ def test_no_tiny_domain_fact_windows(spark):
     value) domain first (operators/valuedomain.py); windows over
     pre-aggregated rollups partitioned by the same columns are fine and
     not flagged."""
-    from ngram_analytics_spark.queries import build_registry
-
     offenders = {}
-    for name, fn in build_registry().queries.items():
-        df = fn(spark, SF_SMOKE)
+    for name in registry.queries:
+        df = smoke_df(name)
         n = P.tiny_domain_fact_window_count(df)
         if n and "WindowGroupLimit" in P.physical_plan(df):
             # rank-limit windows (row_number + rn<=k filter) lower to
