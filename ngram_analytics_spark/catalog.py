@@ -20,18 +20,29 @@ The reference rebuilds its SQL context on every call
   next load infer again. Only the schema is cached, never the
   DataFrame: every load returns a fresh relation with fresh attribute
   ids, so self-joins of two loads still resolve.
-- The session confs in :data:`SESSION_CONF` are set once for each
-  session the catalog has not seen before (``session.get_spark``
-  builds sessions with them; a session built elsewhere gets them on
-  its first load).
+- :func:`_pin` sets each session's confs once, on its first load
+  (``session.get_spark`` builds sessions with :data:`SESSION_CONF`
+  already; a session built elsewhere gets them here):
+
+  - the confs in :data:`SESSION_CONF`;
+  - AQE's ``coalescePartitions.initialPartitionNum`` to the session's
+    ``spark.sql.shuffle.partitions``, unless already set: batch
+    queries plan their shuffles with it, so their counts stay;
+  - ``spark.sql.shuffle.partitions`` to half the cores, which only
+    stateful streams read (they run with AQE off).
+
+  Nothing else in the package sets a conf, so callers sharing a
+  session never see one change under them.
 - The ``events.ts`` layout is decided here only: batch loads and the
-  events stream (``streaming.read_events_stream`` via
-  :func:`read_stream`) share the cached schema and the normalization.
+  streams (``streaming.read_events_stream`` and
+  ``read_documents_stream``, via :func:`read_stream`) share the cached
+  schema and the normalization.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +63,8 @@ TABLES = (
 )
 
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+_SHUFFLE_PARTS = "spark.sql.shuffle.partitions"
+_INITIAL_PARTS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
 #: Confs every query session needs. date_format/year/date_trunc results
 #: depend on the session time zone, and Spark's vectorized reader
@@ -61,9 +74,11 @@ SESSION_CONF = {
     _NANOS_AS_LONG: "true",
 }
 
-# Both caches tolerate concurrent callers without a lock: a race costs
-# at most a repeated conf set or a repeated inference of one schema.
+# The schema cache tolerates concurrent callers without a lock: a race
+# costs at most a repeated inference of one schema. Pinning takes a
+# lock, because it reads a conf it then changes.
 _PINNED: weakref.WeakSet = weakref.WeakSet()
+_PIN_LOCK = threading.Lock()
 #: path -> (file identity, stored schema); one entry per path, so a
 #: rewritten file replaces its stale entry.
 _SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
@@ -74,9 +89,33 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def _pin(spark: SparkSession) -> None:
-    if spark not in _PINNED:
+    """Set ``spark``'s session confs, once per session.
+
+    Stream state partitions: a stateful stream runs with AQE off, so
+    it plans its state operators with the raw
+    ``spark.sql.shuffle.partitions``, and the count is pinned in its
+    checkpoint for life. Every micro-batch pays a fixed state-store
+    load and commit per partition. availableNow file streams run many
+    small batches, so that fixed cost outweighs parallelism: half the
+    cores was fastest in an interleaved A/B at local[32] (min of 5
+    walls: leaderboard 2.93 -> 2.25 s, lww 1.85 -> 1.60 s, reach 1.82
+    -> 1.24 s at 16 partitions against 32; the processing splits moved
+    the same way). The count is derived from the cores, never a
+    constant: 4 on 8 cores, 500 on a 1000-core cluster.
+    Batch queries keep their count through ``initialPartitionNum``,
+    which AQE reads in place of ``spark.sql.shuffle.partitions``.
+    """
+    with _PIN_LOCK:
+        if spark in _PINNED:
+            return
         for k, v in SESSION_CONF.items():
             spark.conf.set(k, v)
+        if spark.conf.get(_INITIAL_PARTS, None) is None:
+            spark.conf.set(_INITIAL_PARTS, spark.conf.get(_SHUFFLE_PARTS))
+        spark.conf.set(
+            _SHUFFLE_PARTS,
+            str(max(1, spark.sparkContext.defaultParallelism // 2)),
+        )
         _PINNED.add(spark)
 
 

@@ -267,14 +267,12 @@ def q_ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tumbling-window aggregate executed under REAL Structured
     Streaming: readStream file source -> watermark -> windowed agg ->
-    availableNow trigger -> memory sink, returned as the sink table.
+    availableNow trigger -> memory sink, whose rows are returned.
 
     Same DuckDB oracle as the batch twin (q_stream_tumbling) — the
     hash gate certifies batch-stream parity, not just batch SQL. On an
     unbounded stream the identical plan runs continuously; the
     watermark bounds window state."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     events = S.read_events_stream(spark, sf_dir)
@@ -289,9 +287,7 @@ def q_stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = "t_live_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return S.run_to_memory(agg, output_mode="complete")
 
 
 @REG.register(
@@ -346,8 +342,6 @@ def q_stream_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow -> memory sink. Session state merges adjacent events
     per key and the watermark closes sessions, bounding state — the
     unbounded-stream sessionization pattern."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     events = S.read_events_stream(spark, sf_dir)
@@ -368,9 +362,7 @@ def q_stream_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = "t_live_sess_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return S.run_to_memory(agg, output_mode="complete")
 
 
 # the live session query shares the batch twin's oracle (hash gate
@@ -489,8 +481,6 @@ def q_stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     every event feeds two overlapping window states; the watermark
     expires both. Hash-matches the batch twin's expanded-starts oracle
     (batch-stream parity for overlapping windows)."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     events = S.read_events_stream(spark, sf_dir)
@@ -507,9 +497,7 @@ def q_stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = "t_live_slide_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return S.run_to_memory(agg, output_mode="complete")
 
 
 REG.oracles["q_stream_live_sliding"] = REG.oracles["q_stream_sliding"]
@@ -534,17 +522,13 @@ def q_stream_live_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     state GC'd past the watermark), whose survivor set depends on
     arrival order and is therefore exercised in tests, not the hash
     gate."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     events = S.read_events_stream(spark, sf_dir)
     dedup = events.dropDuplicates(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    name = "t_live_dedup_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(dedup, name, output_mode="append")
-    return spark.table(name)
+    return S.run_to_memory(dedup, output_mode="append")
 
 
 @REG.register(
@@ -572,8 +556,6 @@ def q_stream_live_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Hash-certified against the equivalent batch join+agg, so the gate
     covers the join semantics, not just the agg."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     cohort = (
@@ -593,9 +575,7 @@ def q_stream_live_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    name = "t_live_sjoin_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return S.run_to_memory(agg, output_mode="complete")
 
 
 @REG.register(
@@ -619,8 +599,6 @@ def q_stream_live_pairjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The emitted pair set is arrival-order independent, so the hash
     gate certifies streaming-join/batch-join parity exactly."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     l = S.read_events_stream(spark, sf_dir)
@@ -630,9 +608,7 @@ def q_stream_live_pairjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_id"),
         F.col("r_id"),
     )
-    name = "t_live_pj_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(joined, name, output_mode="append")
-    return spark.table(name)
+    return S.run_to_memory(joined, output_mode="append")
 
 
 @REG.register(
@@ -990,17 +966,13 @@ def q_stream_live_lww(spark: SparkSession, sf_dir: str) -> DataFrame:
     arg_max skips NULL values while the state cache would store them
     — probed divergent, now aligned: the cache tracks the last
     PRESENT value)."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     events = S.read_events_stream(spark, sf_dir).filter(
         F.col("value").isNotNull()
     )
     st = S.lww_state(events)
-    name = "t_live_lww_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(st, name, output_mode="update")
-    snap = spark.table(name)
+    snap = S.run_to_memory(st, output_mode="update")
     final = snap.groupBy("user_id").agg(
         F.max("n_seen").alias("n_events"),
         F.max_by("last_ts_us", "n_seen").alias("_ts_us"),
@@ -1200,8 +1172,6 @@ def q_stream_live_session_dynamic(
     the LIVE execution path bit-for-bit (hash-gate batch-stream
     parity, the q_stream_live_session discipline; oracle shared via
     the registry alias below)."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     events = S.read_events_stream(spark, sf_dir)
@@ -1233,9 +1203,7 @@ def q_stream_live_session_dynamic(
             "sum_value",
         )
     )
-    name = "t_live_dsess_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    return S.run_to_memory(agg, output_mode="complete")
 
 
 # live dynamic-gap twin shares the batch twin's oracle (batch-stream
@@ -1271,8 +1239,6 @@ def q_stream_live_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     availableNow + complete-mode memory sink, the module's live-twin
     convention (single-batch convergence to the batch answer)."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     events = S.read_events_stream(spark, sf_dir)
@@ -1282,9 +1248,7 @@ def q_stream_live_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = daily.groupBy("event_type", "day").agg(
         F.count("*").alias("ndv_users")
     )
-    name = "t_live_reach_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name).select(
+    return S.run_to_memory(agg, output_mode="complete").select(
         "event_type",
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         "ndv_users",
@@ -1436,8 +1400,6 @@ def q_stream_live_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     and keeps top-{_LB_TOPK} per salt, phase 2 ranks the <=32*k
     survivors per type — bounded at any user count, and correct
     because every global top-k row is in its salt's top-k."""
-    import hashlib
-
     from pyspark.sql.window import Window as W
 
     from ngram_analytics_spark import streaming as S
@@ -1448,9 +1410,7 @@ def q_stream_live_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").isNotNull()
     )
     st = S.leaderboard_state(events)
-    name = "t_live_lb_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(st, name, output_mode="update")
-    snap = spark.table(name)
+    snap = S.run_to_memory(st, output_mode="update")
     final = snap.groupBy("event_type", "user_id").agg(
         F.max("n_seen").alias("n_events"),
         F.max_by("ticks", "n_seen").alias("ticks"),
@@ -1626,17 +1586,13 @@ def q_stream_live_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, no eviction needed because the aggregate itself is
     bounded by the type domain); the staleness join is a 1-row
     broadcast of the global max onto the 5-row result."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     events = S.read_events_stream(spark, sf_dir)
     agg = events.groupBy("event_type").agg(
         F.max("ts").alias("mx"), F.count("*").alias("n_events")
     )
-    name = "t_fresh_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(agg, name, output_mode="complete")
-    t = spark.table(name)
+    t = S.run_to_memory(agg, output_mode="complete")
     gmax = t.agg(F.max("mx").alias("gmx"))
     return (
         t.crossJoin(F.broadcast(gmax))
@@ -1699,8 +1655,6 @@ def q_stream_live_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing user-sized ever reaches the driver.
 
     Determinism: integer counts and a ppm integer division."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     events = S.read_events_stream(spark, sf_dir)
@@ -1710,9 +1664,7 @@ def q_stream_live_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("conv"),
         F.count("*").alias("n_events"),
     )
-    name = "t_ab_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(per_user, name, output_mode="complete")
-    u = spark.table(name)
+    u = S.run_to_memory(per_user, output_mode="complete")
     return (
         u.select(
             (F.col("user_id") % 2).alias("variant"), "conv", "n_events"
@@ -1909,8 +1861,6 @@ def q_stream_live_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: signature state is one row per DISTINCT signature (clone
     floods collapse); the projection is linear per doc and the only
     shuffle is the signature groupBy."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
     from ngram_analytics_spark.operators.dedup import (
         _MH_SIG,
@@ -1933,12 +1883,8 @@ def q_stream_live_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").alias("gid"),
         F.count("*").cast("long").alias("n_docs"),
     )
-    name = (
-        "t_live_minhash_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    )
-    S.run_to_memory(grp, name, output_mode="complete")
     return (
-        spark.table(name)
+        S.run_to_memory(grp, output_mode="complete")
         .filter(F.col("n_docs") >= 2)
         .select("gid", "n_docs")
     )
@@ -1985,8 +1931,6 @@ def q_stream_live_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: span state is one row per distinct window digest; a
     boilerplate flood hits ONE state row per span (counter bump), the
     same linearity the batch df-join has."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
     from ngram_analytics_spark.queries.llm_q import _SS_STRIDE, _SS_W
 
@@ -2017,10 +1961,8 @@ def q_stream_live_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_occ"),
         F.min("doc_id").alias("first_doc"),
     )
-    name = "t_live_spans_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    S.run_to_memory(agg, name, output_mode="complete")
     return (
-        spark.table(name)
+        S.run_to_memory(agg, output_mode="complete")
         .filter(F.col("n_occ") > 1)
         .select("wh", "n_occ", "first_doc")
     )
@@ -2066,8 +2008,6 @@ def q_stream_live_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is AT MOST |event_type| x 9 rows no matter the event
     volume — the cheapest possible stateful query; the only shuffle
     is the digit-domain groupBy."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
 
     ev = S.read_events_stream(spark, sf_dir)
@@ -2085,12 +2025,10 @@ def q_stream_live_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = t.groupBy("event_type", "digit").agg(
         F.count("*").cast("long").alias("n")
     )
-    name = (
-        "t_live_benford_" + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    )
-    S.run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name).select("event_type", "digit", "n").orderBy(
-        "event_type", "digit"
+    return (
+        S.run_to_memory(agg, output_mode="complete")
+        .select("event_type", "digit", "n")
+        .orderBy("event_type", "digit")
     )
 
 
@@ -2129,8 +2067,6 @@ def q_stream_live_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: streaming state is VOCABULARY-sized (one row per distinct
     bigram), never corpus-sized; the only shuffle is the bigram-key
     groupBy, map-side combined per micro-batch."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
     from ngram_analytics_spark.operators.ngram import ngram_col
 
@@ -2151,13 +2087,8 @@ def q_stream_live_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("ngram")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-    name = (
-        "t_live_ngram_topk_"
-        + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    )
-    S.run_to_memory(g, name, output_mode="complete")
     return (
-        spark.table(name)
+        S.run_to_memory(g, output_mode="complete")
         .orderBy(F.col("cnt").desc(), F.col("ngram").asc())
         .limit(20)
     )
@@ -2207,8 +2138,6 @@ def q_stream_live_filter_yield(
 
     Scale: state is |sources| x 2 counter rows at ANY volume; the
     per-row gates are scan-stage array expressions."""
-    import hashlib
-
     from ngram_analytics_spark import streaming as S
     from ngram_analytics_spark.queries.text_q import _STOPWORDS
 
@@ -2239,13 +2168,8 @@ def q_stream_live_filter_yield(
         .groupBy("source", "keep")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    name = (
-        "t_live_filter_yield_"
-        + hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    )
-    S.run_to_memory(agg, name, output_mode="complete")
     return (
-        spark.table(name)
+        S.run_to_memory(agg, output_mode="complete")
         .select("source", "keep", "n")
         .orderBy("source", "keep")
     )

@@ -8,7 +8,11 @@ Scale design notes (100 TB):
   broadcast decisions survive bad static estimates at cluster scale.
 - ``spark.sql.shuffle.partitions`` is a local-mode default only; on a
   real cluster AQE's coalescing makes the static value far less
-  critical, and per-job overrides are the tuning point.
+  critical. Set it at build time (``extra_conf``): no query changes a
+  conf per call, because every caller of the session would see the
+  change. On a session's first load the catalog moves the value to
+  AQE's initial partition number, which batch queries plan with, and
+  leaves half the cores for stateful streams (``catalog._pin``).
 - The catalog's session confs (``catalog.SESSION_CONF``: time zone
   pinned to UTC so date/time functions are deterministic and match the
   DuckDB oracle; parquet TIMESTAMP(NANOS) surfaced as long) are set at

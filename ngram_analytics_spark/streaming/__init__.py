@@ -1,6 +1,6 @@
 """Structured Streaming surface: file-source streams over the events
-table, watermarked windowed aggregation, streaming dedup, and a custom
-stateful operator via applyInPandasWithState.
+and documents tables, watermarked windowed aggregation, streaming
+dedup, and a custom stateful operator via applyInPandasWithState.
 
 Correctness definition = batch-stream parity: the same window
 expressions run in ngram_analytics_spark.queries.timeseries_q in batch
@@ -8,6 +8,12 @@ mode (DuckDB-oracled); here they run under ``readStream`` with an
 ``availableNow`` trigger and must converge to the batch answer
 (tests/test_streaming.py). DuckDB has no streaming — these are
 smoke/parity checked, not SQL-oracled, by design (SURVEY.md §2.B).
+
+:func:`run_to_memory` is the one place that names, runs and reads back
+a memory-sink stream: each run gets its own sink, so callers sharing
+one session can run the same stream at once. No function here sets a
+conf; the state partition count streams run with is set once per
+session by the catalog (``catalog._pin``).
 """
 
 from __future__ import annotations
@@ -28,6 +34,7 @@ def _stage(sf_dir: str, name: str, prefix: str) -> str:
     DIRECTORY of part files the file source won't recurse into through
     one symlink, so those are staged individually.
     """
+    import contextlib
     import hashlib
     import os
     import tempfile
@@ -44,9 +51,8 @@ def _stage(sf_dir: str, name: str, prefix: str) -> str:
         # older staging layout) — inert today (the file source ignores
         # directory links) but a recursion/listing change would
         # double-read it
-        legacy = os.path.join(stage, os.path.basename(src))
-        if os.path.lexists(legacy):
-            os.remove(legacy)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(stage, os.path.basename(src)))
         parts = [
             os.path.join(src, fn)
             for fn in sorted(os.listdir(src))
@@ -55,12 +61,28 @@ def _stage(sf_dir: str, name: str, prefix: str) -> str:
     else:
         parts = [src]
     for p in parts:
-        link = os.path.join(stage, os.path.basename(p))
-        if os.path.lexists(link) and os.path.realpath(link) != p:
-            os.remove(link)
-        if not os.path.lexists(link):
-            os.symlink(p, link)
+        _link(p, os.path.join(stage, os.path.basename(p)))
     return stage
+
+
+def _link(target: str, link: str) -> None:
+    """Make ``link`` a symlink to ``target``. Concurrent first uses of
+    one stage may race here: a link that already resolves to
+    ``target`` is accepted, and a stale one is replaced by an atomic
+    rename of a fresh link (dot-named, so a stream listing the stage
+    meanwhile skips it)."""
+    import os
+    import uuid
+
+    try:
+        os.symlink(target, link)
+    except FileExistsError:
+        if os.path.realpath(link) == os.path.realpath(target):
+            return
+        head, tail = os.path.split(link)
+        tmp = os.path.join(head, f".{tail}.{uuid.uuid4().hex}")
+        os.symlink(target, tmp)
+        os.replace(tmp, link)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,14 +101,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents parquet (the streaming
-    twin of catalog.load("documents")). Documents carry no timestamps,
-    so the stream schema is fixed."""
+    twin of catalog.load("documents")), with the table's stored
+    schema."""
     stage = _stage(sf_dir, "documents", "nas-docstream")
-    schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    return spark.readStream.schema(schema).parquet(stage)
+    return catalog.read_stream(spark, sf_dir, "documents", stage)
 
 
 def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -140,64 +158,44 @@ def running_user_counts(events: DataFrame) -> DataFrame:
 
 
 #: per-stream timing splits appended by run_to_memory, in call order.
-#: bench.py snapshots the list length around each timed query and
-#: attributes new entries to it (VERDICT r11 item 5: the ~1.3-4.3 s
-#: fixed micro-batch startup was masking real processing regressions
-#: in the extended bench — the split makes them visible).  Each entry:
-#: {"name", "wall_s", "process_s" (sum of triggerExecution across
+#: bench.py and perfbench/run.py take the list length before a timed
+#: stretch and attribute the entries added after it to that stretch,
+#: so the ~1.3-4.3 s fixed micro-batch startup cannot mask a
+#: processing regression. Each entry: {"name" (the run's sink name),
+#: "wall_s", "process_s" (sum of triggerExecution across
 #: micro-batches), "startup_s" (wall - process: plan/compile/source
 #: listing/sink setup), "n_batches"}.
 STREAM_RUNS: list[dict] = []
 
 
-def stream_state_partitions(spark: SparkSession) -> int:
-    """State-store partition count pinned at stream birth (VERDICT
-    r14 item 4). Stateful streaming disables AQE, so the stream runs
-    with the raw ``spark.sql.shuffle.partitions`` forever (the count
-    is checkpoint-pinned); every micro-batch then pays a fixed
-    per-partition state-store load/commit cost. For availableNow
-    file-per-trigger streams the batches are many and small, so that
-    fixed cost dominates raw parallelism: cores/2 was decisively
-    fastest in the r15 interleaved A/B (local[32], min-of-5 walls —
-    leaderboard 2.93->2.25 s, lww 1.85->1.60, reach 1.82->1.24 at 16
-    partitions vs 32; processing splits move the same way).
-
-    The count stays CORES-DERIVED (defaultParallelism // 2), never
-    a constant, so an 8-core driver run gets 4 and a 1000-core
-    cluster gets 500."""
-    return max(1, spark.sparkContext.defaultParallelism // 2)
-
-
-def run_to_memory(
-    stream_df: DataFrame, query_name: str, output_mode: str = "complete"
-) -> None:
+def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drive a streaming query to completion on the available data
-    (availableNow trigger) into an in-memory sink table; record the
-    startup-vs-processing wall split in STREAM_RUNS. State partitions
-    are sized by :func:`stream_state_partitions` for the duration of
-    the stream (the conf is read once at query start; restored
-    after)."""
+    (availableNow trigger) into a memory sink of its own, record the
+    startup-vs-processing wall split in STREAM_RUNS, and return the
+    sink's rows.
+
+    The sink gets a fresh name per run and its temp view is dropped
+    before returning: the returned frame keeps the rows, and two
+    callers running the same stream on one session cannot collide."""
     import time
+    import uuid
 
     sess = stream_df.sparkSession
-    prev_parts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(stream_state_partitions(sess)),
-    )
+    name = f"nas_sink_{uuid.uuid4().hex}"
     t0 = time.perf_counter()
+    q = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
     try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(query_name)
-            .trigger(availableNow=True)
-            .start()
-        )
         q.awaitTermination()
+        wall = time.perf_counter() - t0
+        rows = sess.table(name)
     finally:
-        sess.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    wall = time.perf_counter() - t0
+        sess.catalog.dropTempView(name)
     process = 0.0
     n_batches = 0
     try:
@@ -208,7 +206,7 @@ def run_to_memory(
         process, n_batches = 0.0, -1
     STREAM_RUNS.append(
         {
-            "name": query_name,
+            "name": name,
             "wall_s": round(wall, 3),
             "process_s": round(process, 3),
             "startup_s": round(max(0.0, wall - process), 3),
@@ -220,6 +218,7 @@ def run_to_memory(
     # list offsets within one run, far below this cap)
     if len(STREAM_RUNS) > 4096:
         del STREAM_RUNS[:-2048]
+    return rows
 
 
 def stream_stream_join(

@@ -102,6 +102,39 @@ def test_session_confs_set_once_per_session(spark):
     assert other.conf.get(tz) == "Asia/Tokyo"
 
 
+def test_pin_keeps_batch_partitions_and_halves_stream_state(spark, tmp_path):
+    """The pin moves a session's shuffle partition count to AQE's
+    initial partition number, where batch plans read it, and leaves
+    half the default parallelism in ``spark.sql.shuffle.partitions``
+    for stateful streams, which run with AQE off."""
+    import re
+
+    from ngram_analytics_spark import streaming
+
+    other = spark.newSession()
+    other.conf.set("spark.sql.shuffle.partitions", "200")
+    events = catalog.load(other, SF_SMOKE, "events")
+    plan = (
+        events.groupBy("event_type").count()
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert re.search(r"hashpartitioning\(event_type#\d+, 200\)", plan), plan
+
+    want = max(1, other.sparkContext.defaultParallelism // 2)
+    q = (
+        streaming.tumbling_counts(streaming.read_events_stream(other, SF_SMOKE))
+        .writeStream.outputMode("complete")
+        .format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    ops = [op for p in q.recentProgress for op in p["stateOperators"]]
+    assert ops
+    assert {op["numShufflePartitions"] for op in ops} == {want}
+
+
 @pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_CORRECT])
 def test_lineitem_partkey_references_part(sf_dir):
     """q_basket_lift counts its order total over lineitem rows joined to

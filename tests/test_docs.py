@@ -235,3 +235,36 @@ def test_every_public_helper_has_a_caller():
         and uses[node.name] == names(node).count(node.name)
     ]
     assert not dead, f"public helpers nothing references: {dead}"
+
+
+def test_no_conf_set_outside_the_session_pin():
+    """Session-global confs are set in two places only: the
+    session factory ``get_spark`` and ``catalog._pin``, once per session. A
+    ``.conf.set(`` anywhere else in the package changes the conf under
+    every other caller of the session, who may be planning or running
+    at that moment."""
+    import ast
+
+    pkg = REPO / "ngram_analytics_spark"
+    allowed = {("catalog.py", "_pin"), ("session.py", "get_spark")}
+    found = []
+
+    def scan(node, rel, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scan(child, rel, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "set"
+                and isinstance(child.func.value, ast.Attribute)
+                and child.func.value.attr == "conf"
+                and (rel, owner) not in allowed
+            ):
+                found.append(f"{rel}:{child.lineno} in {owner}")
+            scan(child, rel, owner)
+
+    for path in sorted(pkg.rglob("*.py")):
+        scan(ast.parse(path.read_text()), str(path.relative_to(pkg)), None)
+    assert not found, f".conf.set( outside the session pin: {found}"

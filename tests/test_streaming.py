@@ -6,6 +6,7 @@ file source (availableNow) must equal the batch answer (SURVEY.md §5.2).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ngram_analytics_spark import streaming as S
@@ -15,11 +16,8 @@ from tests.conftest import SF_SMOKE
 
 def test_tumbling_batch_stream_parity(spark):
     stream = S.tumbling_counts(S.read_events_stream(spark, SF_SMOKE))
-    S.run_to_memory(stream, "t_tumbling", output_mode="complete")
-    got = {
-        (r.win_start, r.event_type): r.n
-        for r in spark.sql("SELECT * FROM t_tumbling").collect()
-    }
+    out = S.run_to_memory(stream, output_mode="complete")
+    got = {(r.win_start, r.event_type): r.n for r in out.collect()}
 
     batch = (
         load(spark, SF_SMOKE, "events")
@@ -38,18 +36,19 @@ def test_tumbling_batch_stream_parity(spark):
 
 def test_dedup_within_watermark_stream(spark):
     stream = S.dedup_within_watermark(S.read_events_stream(spark, SF_SMOKE))
-    S.run_to_memory(stream, "t_dedup", output_mode="append")
-    n = spark.sql("SELECT count(*) AS n FROM t_dedup").collect()[0].n
+    n = S.run_to_memory(stream, output_mode="append").count()
     n_batch = load(spark, SF_SMOKE, "events").select("event_id").distinct().count()
     assert n == n_batch
 
 
 def test_stateful_running_counts(spark):
     stream = S.running_user_counts(S.read_events_stream(spark, SF_SMOKE))
-    S.run_to_memory(stream, "t_state", output_mode="update")
-    rows = spark.sql(
-        "SELECT user_id, max(n_events) AS n FROM t_state GROUP BY user_id"
-    ).collect()
+    rows = (
+        S.run_to_memory(stream, output_mode="update")
+        .groupBy("user_id")
+        .agg(F.max("n_events").alias("n"))
+        .collect()
+    )
     got = {r.user_id: r.n for r in rows}
     want = {
         r.user_id: r.n
@@ -65,10 +64,9 @@ def test_watermark_drops_nothing_on_ordered_replay(spark):
     """availableNow over a single file: watermark present, no late data
     => row counts match the raw source."""
     stream = S.read_events_stream(spark, SF_SMOKE).withWatermark("ts", "10 minutes")
-    S.run_to_memory(
-        stream.select("event_id", "ts"), "t_passthru", output_mode="append"
-    )
-    n = spark.sql("SELECT count(*) AS n FROM t_passthru").collect()[0].n
+    n = S.run_to_memory(
+        stream.select("event_id", "ts"), output_mode="append"
+    ).count()
     assert n == load(spark, SF_SMOKE, "events").count()
 
 
@@ -78,11 +76,8 @@ def test_stream_stream_join_batch_parity(spark):
     l_stream = S.read_events_stream(spark, SF_SMOKE)
     r_stream = S.read_events_stream(spark, SF_SMOKE)
     joined = S.stream_stream_join(l_stream, r_stream)
-    S.run_to_memory(joined, "t_ss_join", output_mode="append")
-    got = sorted(
-        (r.l_id, r.r_id)
-        for r in spark.sql("SELECT l_id, r_id FROM t_ss_join").collect()
-    )
+    out = S.run_to_memory(joined, output_mode="append")
+    got = sorted((r.l_id, r.r_id) for r in out.collect())
 
     e = load(spark, SF_SMOKE, "events")
     batch = S.stream_stream_join(e, e)  # same helper works on batch frames
@@ -93,11 +88,8 @@ def test_stream_stream_join_batch_parity(spark):
 
 def test_session_window_batch_stream_parity(spark):
     stream = S.session_counts(S.read_events_stream(spark, SF_SMOKE))
-    S.run_to_memory(stream, "t_session", output_mode="complete")
-    got = {
-        (r.user_id, r.s_start): r.n
-        for r in spark.sql("SELECT * FROM t_session").collect()
-    }
+    out = S.run_to_memory(stream, output_mode="complete")
+    got = {(r.user_id, r.s_start): r.n for r in out.collect()}
     batch = S.session_counts(load(spark, SF_SMOKE, "events"))
     want = {(r.user_id, r.s_start): r.n for r in batch.collect()}
     assert got == want
@@ -139,11 +131,10 @@ def test_read_events_stream_adapts_to_both_ts_layouts(spark, tmp_path):
         stream = S.read_events_stream(spark, str(sf_dir))
         assert dict(batch.dtypes)["ts"] == "timestamp"
         assert dict(stream.dtypes)["ts"] == "timestamp"
-        name = f"t_layout_{unit}"
-        S.run_to_memory(
-            stream.select("event_id", "ts"), name, output_mode="append"
+        streamed = S.run_to_memory(
+            stream.select("event_id", "ts"), output_mode="append"
         )
-        for kind, got in (("batch", batch), ("stream", spark.table(name))):
+        for kind, got in (("batch", batch), ("stream", streamed)):
             rows = {
                 r.event_id: r.ts.strftime("%Y-%m-%d %H:%M:%S")
                 for r in got.collect()
@@ -174,16 +165,16 @@ def test_lww_state_invariant_to_batch_splits(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    S.run_to_memory(S.lww_state(stream), "t_lww_split", output_mode="update")
-    final = spark.sql(
-        """
-        SELECT user_id,
-               max(n_seen) AS n,
-               max_by(last_ts_us, n_seen) AS ts_us,
-               max_by(last_val, n_seen) AS val
-        FROM t_lww_split GROUP BY user_id
-        """
-    ).collect()
+    final = (
+        S.run_to_memory(S.lww_state(stream), output_mode="update")
+        .groupBy("user_id")
+        .agg(
+            F.max("n_seen").alias("n"),
+            F.max_by("last_ts_us", "n_seen").alias("ts_us"),
+            F.max_by("last_val", "n_seen").alias("val"),
+        )
+        .collect()
+    )
     got = {r.user_id: (r.n, r.ts_us, r.val) for r in final}
     want = {
         r.user_id: (r.n, r.ts_us, r.val)
@@ -226,17 +217,15 @@ def test_leaderboard_state_invariant_to_batch_splits(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    S.run_to_memory(
-        S.leaderboard_state(stream), "t_lb_split", output_mode="update"
+    final = (
+        S.run_to_memory(S.leaderboard_state(stream), output_mode="update")
+        .groupBy("event_type", "user_id")
+        .agg(
+            F.max("n_seen").alias("n"),
+            F.max_by("ticks", "n_seen").alias("ticks"),
+        )
+        .collect()
     )
-    final = spark.sql(
-        """
-        SELECT event_type, user_id,
-               max(n_seen) AS n,
-               max_by(ticks, n_seen) AS ticks
-        FROM t_lb_split GROUP BY event_type, user_id
-        """
-    ).collect()
     got = {(r.event_type, r.user_id): (r.n, r.ticks) for r in final}
     ticks = (
         F.floor(F.abs("value") * 10000.0 + F.lit(0.5)).cast("long")
@@ -258,12 +247,62 @@ def test_run_to_memory_records_timing_split(spark):
     fixed micro-batch startup stops masking processing regressions)."""
     mark = len(S.STREAM_RUNS)
     stream = S.tumbling_counts(S.read_events_stream(spark, SF_SMOKE))
-    S.run_to_memory(stream, "t_split_pin", output_mode="complete")
+    out = S.run_to_memory(stream, output_mode="complete")
     new = S.STREAM_RUNS[mark:]
     assert len(new) == 1
     r = new[0]
-    assert r["name"] == "t_split_pin"
+    # the record names the sink the returned frame reads
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert f"SubqueryAlias {r['name']}\n" in analyzed, analyzed
     assert r["n_batches"] >= 1
     assert r["process_s"] > 0
     assert r["startup_s"] >= 0
     assert abs((r["startup_s"] + r["process_s"]) - r["wall_s"]) < 0.002
+
+
+@pytest.mark.parametrize("stage", ["warm", "cold"])
+def test_live_streams_share_one_session(
+    spark, duck, registry, stage, monkeypatch, tmp_path
+):
+    """Two threads released together run live keys on one session:
+    q_stream_live_tumbling twice and q_stream_live_dedup once. Every
+    run gets its own sink and matches its oracle, and the session's
+    shuffle partition count is the same afterwards. ``cold`` points
+    the temp dir at an empty one, so both threads stage the events
+    table at the same moment."""
+    import tempfile
+    import threading
+
+    from ngram_analytics_spark.testing import compare, duck_result, spark_result
+
+    if stage == "cold":
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    plans = (
+        ["q_stream_live_tumbling", "q_stream_live_dedup"],
+        ["q_stream_live_tumbling"],
+    )
+    barrier = threading.Barrier(len(plans), timeout=120)
+    results, errors = [], []
+
+    def drive(keys):
+        try:
+            barrier.wait()
+            for k in keys:
+                results.append((k, spark_result(registry.queries[k](spark, SF_SMOKE))))
+        except Exception as e:  # reported below, in the test's thread
+            errors.append(f"{keys}: {type(e).__name__}: {e}")
+
+    threads = [threading.Thread(target=drive, args=(p,)) for p in plans]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads), "a stream did not finish"
+    assert not errors, errors
+    assert sorted(k for k, _ in results) == sorted(sum(plans, []))
+    for k, (scols, srows) in results:
+        problems = compare(scols, srows, *duck_result(duck, registry.oracles[k]))
+        assert not problems, f"{k}: " + "\n".join(problems)
+        assert srows, k
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
