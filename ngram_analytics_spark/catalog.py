@@ -37,6 +37,15 @@ The reference rebuilds its SQL context on every call
   streams (``streaming.read_events_stream`` and
   ``read_documents_stream``, via :func:`read_stream`) share the cached
   schema and the normalization.
+- Every on-disk working directory of the package comes from
+  :func:`scratch`: copies derived from the tables (the partitioned and
+  bucketed ``orders``/``lineitem``, the staged stream inputs) and the
+  per-run directories of the round-trip and sink queries. A path lives
+  under one root per process, ``<tempdir>/nas-scratch-<pid>``, which is
+  removed when the interpreter exits, or by the next process's first
+  use if this one dies first. A derived copy is keyed by the file
+  identity of the tables it copies, so it is reused only while they
+  are unchanged.
 """
 
 from __future__ import annotations
@@ -82,6 +91,11 @@ _PIN_LOCK = threading.Lock()
 #: path -> (file identity, stored schema); one entry per path, so a
 #: rewritten file replaces its stale entry.
 _SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+_SCRATCH_PREFIX = "nas-scratch-"
+#: scratch roots set up by :func:`scratch`; one per process, but a
+#: forked child or a changed temp dir makes a new one
+_ROOTS: set[str] = set()
+_SCRATCH_LOCK = threading.Lock()
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -119,27 +133,80 @@ def _pin(spark: SparkSession) -> None:
         _PINNED.add(spark)
 
 
-def _stored_schema(spark: SparkSession, path: str) -> T.StructType | None:
-    """The parquet schema at ``path``, inferred once per file identity.
-    None when the path cannot be stat'ed locally (missing, or a
-    non-local URI): the caller then reads with inference, and Spark
-    reports a missing path as usual."""
+def _identity(path: str) -> tuple | None:
+    """Size, ``st_mtime_ns`` and inode of ``path``; None when it cannot
+    be stat'ed locally (missing, or a non-local URI)."""
     try:
         st = os.stat(path)
     except OSError:
         return None
-    ident = (
-        st.st_size,
-        st.st_mtime_ns,
-        st.st_ino,
-        spark.conf.get(_NANOS_AS_LONG, "false"),
-    )
+    return (st.st_size, st.st_mtime_ns, st.st_ino)
+
+
+def _stored_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The parquet schema at ``path``, inferred once per file identity.
+    None when the path has no identity: the caller then reads with
+    inference, and Spark reports a missing path as usual."""
+    ident = _identity(path)
+    if ident is None:
+        return None
+    ident += (spark.conf.get(_NANOS_AS_LONG, "false"),)
     hit = _SCHEMAS.get(path)
     if hit is not None and hit[0] == ident:
         return hit[1]
     schema = spark.read.parquet(path).schema
     _SCHEMAS[path] = (ident, schema)
     return schema
+
+
+def scratch(name: str, sf_dir: str, *tables: str) -> str:
+    """The working directory ``name`` of this process for corpus
+    ``sf_dir``: ``<tempdir>/nas-scratch-<pid>/<name>-<tag>``.
+
+    ``tag`` hashes the absolute ``sf_dir`` and the file identity of
+    each of ``tables``, so a copy derived from those tables is found
+    again only while they are unchanged; rewriting one moves the path.
+    A per-run directory names no tables, and its caller clears it.
+    Only the path is returned; nothing is created under the root.
+
+    The root is this process's alone. Its first use creates it,
+    registers it once for removal at interpreter exit, and removes the
+    roots of processes that are no longer running (ones that did not
+    exit cleanly). Threads of one process share the root, and this
+    function does not order their uses of one path.
+    """
+    import atexit
+    import hashlib
+    import shutil
+    import tempfile
+
+    tmp = tempfile.gettempdir()
+    root = os.path.join(tmp, f"{_SCRATCH_PREFIX}{os.getpid()}")
+    with _SCRATCH_LOCK:
+        if root not in _ROOTS:
+            os.makedirs(root, exist_ok=True)
+            atexit.register(shutil.rmtree, root, ignore_errors=True)
+            for entry in os.listdir(tmp):
+                pid = entry.removeprefix(_SCRATCH_PREFIX)
+                if pid != entry and pid.isdigit() and not _running(int(pid)):
+                    shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
+            _ROOTS.add(root)
+    key = [os.path.abspath(sf_dir)]
+    for t in tables:
+        _check(t)
+        key.append(_identity(table_path(sf_dir, t)))
+    tag = hashlib.sha1(repr(key).encode()).hexdigest()[:12]
+    return os.path.join(root, f"{name}-{tag}")
+
+
+def _running(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        pass
+    return True
 
 
 def _normalize(df: DataFrame, name: str) -> DataFrame:

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ngram_analytics_spark.catalog import load
+from ngram_analytics_spark.catalog import load, scratch
 from ngram_analytics_spark.functions.deterministic import (
     _quantized,
     oracle_round4det,
@@ -2100,11 +2100,6 @@ q_dedup_host.__doc__ = q_dedup_host.__doc__.format(j=_MH_MIN_J)
 
 # ------------------------------------- incremental (batch-vs-corpus) near-dup
 
-#: per-pid index dirs with an atexit cleanup already registered
-#: (guards double registration across reruns in one process)
-_MH_IDX_CLEANUP: set[str] = set()
-
-
 @REG.register(
     "q_dedup_incremental_fuzzy",
     oracle=f"""
@@ -2199,10 +2194,6 @@ def q_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recursion-free BATCH TWIN over the union'd corpus (the
     q_dedup_incremental spelling): index persistence cannot change
     the candidate set, which is exactly what the hash gate proves."""
-    import hashlib
-    import os
-    import tempfile
-
     from ngram_analytics_spark.operators import spread
 
     d = (
@@ -2213,22 +2204,9 @@ def q_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     newd = d.filter(F.col("doc_id") % 7 == 0)
     corp = d.filter(F.col("doc_id") % 7 != 0)
 
-    # keyed by corpus AND pid: two concurrent sessions on the same
-    # corpus (parallel pytest workers, driver + bench) must not race
-    # overwrite-vs-read on a shared index dir (ADVICE r12); within one
-    # process reruns overwrite the same path, and the dir is removed
-    # at process exit (atexit, registered once per path) so long-lived
-    # hosts do not accumulate one leaked index per pid
-    tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    idx = os.path.join(
-        tempfile.gettempdir(), f"nas-mhidx-{tag}-{os.getpid()}"
-    )
-    if idx not in _MH_IDX_CLEANUP:
-        import atexit
-        import shutil
-
-        _MH_IDX_CLEANUP.add(idx)
-        atexit.register(shutil.rmtree, idx, ignore_errors=True)
+    # this process's own directory: reruns overwrite it, and a
+    # concurrent process never reads an index it is rewriting
+    idx = scratch("mhidx", sf_dir)
     minhash_index_write(minhash_signatures(corp.select("doc_id", "st")), idx)
 
     pairs = minhash_index_probe(

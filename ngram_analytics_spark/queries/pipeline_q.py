@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ngram_analytics_spark.catalog import load
+from ngram_analytics_spark.catalog import load, scratch
 from ngram_analytics_spark.functions.deterministic import (
     dsum_fixed,
     oracle_dsum_fixed,
@@ -324,16 +324,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # parquet: a round-trip that loses type or value fidelity hash-fails.
 
 
-def _roundtrip_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    base = os.path.join(
-        "/tmp",
-        "nas_src_roundtrip",
-        os.path.basename(os.path.normpath(sf_dir)),
-        fmt,
-    )
-    return base
-
-
 @REG.register(
     "q_source_csv",
     oracle=f"""
@@ -349,7 +339,7 @@ def q_source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     hazard), joined to the broadcast nation dim and aggregated.
     Balances are compared in exact integer cents — if CSV float
     formatting lost a digit anywhere, the hash gate catches it."""
-    out = _roundtrip_dir(spark, sf_dir, "csv")
+    out = scratch("roundtrip_csv", sf_dir)
     c = load(spark, sf_dir, "customer")
     c.write.mode("overwrite").option("header", True).csv(out)
     schema = (
@@ -382,7 +372,7 @@ def q_source_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source/sink round-trip on a filtered orders slice —
     timestamps survive as ISO strings and are re-parsed by the explicit
     read schema; exact integer-cents totals pin value fidelity."""
-    out = _roundtrip_dir(spark, sf_dir, "json")
+    out = scratch("roundtrip_json", sf_dir)
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     o.write.mode("overwrite").json(out)
     schema = (
@@ -412,7 +402,7 @@ def q_source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink round-trip (the other columnar format Spark
     ships natively): supplier written and re-read as ORC, aggregated
     per nation in exact integer cents."""
-    out = _roundtrip_dir(spark, sf_dir, "orc")
+    out = scratch("roundtrip_orc", sf_dir)
     s = load(spark, sf_dir, "supplier")
     s.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
@@ -599,7 +589,7 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions hash against the original rows, the restated one
     against the 2x oracle — in exact integer cents. The mode is a
     per-WRITE option (no session-level conf mutation)."""
-    out = _roundtrip_dir(spark, sf_dir, "dynpart")
+    out = scratch("roundtrip_dynpart", sf_dir)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -858,7 +848,7 @@ def q_source_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     still splits files and parses rows distributed; the aggregation
     is the usual map-side-combined rollup. Writers shard per task
     exactly like csv/json — no driver funnel."""
-    out = _roundtrip_dir(spark, sf_dir, "xml")
+    out = scratch("roundtrip_xml", sf_dir)
     s = load(spark, sf_dir, "supplier")
     s.write.mode("overwrite").format("xml").option("rowTag", "supplier").save(
         out
@@ -993,7 +983,7 @@ def q_source_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifts every later one (the probe read doc_ids back as langs), so
     NULL lang/text rows are excluded from the dump on BOTH engines,
     the third explicit invariant of this format."""
-    out = _roundtrip_dir(spark, sf_dir, "text")
+    out = scratch("roundtrip_text", sf_dir)
     d = load(spark, sf_dir, "documents").filter(
         F.col("lang").isNotNull() & F.col("text").isNotNull()
     )
@@ -1360,7 +1350,7 @@ def q_source_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     UTF-8 encoding — same bytes by construction)."""
     import shutil
 
-    out = _roundtrip_dir(spark, sf_dir, "binary")
+    out = scratch("roundtrip_binary", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
     # NULL contract (tools/null_probe.py): a payload export has no
@@ -1549,37 +1539,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (footer-schema union is metadata work, scan stays columnar +
     pushdown), broadcast-free single agg. Price mass rides int64
     cents."""
-    import os
-
-    import shutil
-
-    # the app-id suffix makes the write->mergeSchema-read round-trip
-    # safe under concurrent sessions on one host (e.g. bench while a
-    # diffcheck runs) — each session round-trips its own directory.
-    # Sibling dirs from FINISHED sessions are reaped here (age-gated:
-    # only dirs untouched for > 1 h, so a LIVE concurrent session is
-    # never clobbered) — without the reap, a grading round's many
-    # short-lived sessions would accumulate orders-sized parquet
-    # under /tmp forever.
-    parent = os.path.join(
-        "/tmp",
-        "nas_src_roundtrip",
-        os.path.basename(os.path.normpath(sf_dir)),
-        "schema_evo",
-    )
-    app_id = spark.sparkContext.applicationId
-    if os.path.isdir(parent):
-        import time as _time
-
-        cutoff = _time.time() - 3600
-        for stale in os.listdir(parent):
-            sp = os.path.join(parent, stale)
-            try:
-                if stale != app_id and os.path.getmtime(sp) < cutoff:
-                    shutil.rmtree(sp, ignore_errors=True)
-            except OSError:
-                pass
-    out = os.path.join(parent, app_id)
+    out = scratch("schema_evo", sf_dir)
     o = load(spark, sf_dir, "orders")
     o.filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_totalprice"

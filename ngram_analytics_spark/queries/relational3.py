@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ngram_analytics_spark.catalog import load, register_views
+from ngram_analytics_spark.catalog import load, register_views, scratch
 from ngram_analytics_spark.functions.deterministic import (
     _oracle_quantized,
     davg,
@@ -559,37 +559,22 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     write, every later join skips both sides' shuffles). Oracle is the
     plain join SQL; the plan property is pinned in tests/test_plans.py.
     """
-    import hashlib
     import os
-    import shutil
 
     from ngram_analytics_spark.sources import write_bucketed
 
-    def ensure_bucketed(name: str, df: DataFrame, key: str) -> None:
-        if spark.catalog.tableExists(name):
-            return
-        # A table dir left by a PREVIOUS session isn't in this session's
-        # in-memory catalog; saveAsTable refuses the orphaned location —
-        # clear it so the bucketed write is idempotent across sessions.
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-        loc = os.path.join(warehouse.removeprefix("file:"), name.lower())
-        if loc and os.path.exists(loc):
-            shutil.rmtree(loc)
-        write_bucketed(df, name, [key], n_buckets=8)
+    def bucketed(name: str, table: str, cols: list[str]) -> DataFrame:
+        # an external table over this process's scratch copy, named
+        # after it: a rewritten source table gets a new copy and name
+        path = scratch(name, sf_dir, table)
+        t = os.path.basename(path).replace("-", "_")
+        if not spark.catalog.tableExists(t):
+            df = load(spark, sf_dir, table).select(*cols)
+            write_bucketed(df, t, cols[:1], path, n_buckets=8)
+        return spark.table(t)
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    lt, ot = f"li_bkt_{tag}", f"ord_bkt_{tag}"
-    ensure_bucketed(
-        lt,
-        load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity"),
-        "l_orderkey",
-    )
-    ensure_bucketed(
-        ot,
-        load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
-        "o_orderkey",
-    )
-    li, o = spark.table(lt), spark.table(ot)
+    li = bucketed("li_bkt", "lineitem", ["l_orderkey", "l_quantity"])
+    o = bucketed("ord_bkt", "orders", ["o_orderkey", "o_orderpriority"])
     return (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .groupBy("o_orderpriority")

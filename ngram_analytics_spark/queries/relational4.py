@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ngram_analytics_spark.catalog import load, register_views
+from ngram_analytics_spark.catalog import load, register_views, scratch
 from ngram_analytics_spark.functions.deterministic import (
     oracle_dsum,
     oracle_round_det,
@@ -312,19 +312,15 @@ def q_sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize a hive-partitioned copy of orders (dir-per-priority)
-    under the warehouse, once per sf_dir. The directory layout IS the
-    index: any later reader that filters on o_orderpriority prunes whole
-    directories before reading a byte of data."""
-    import hashlib
+    in this process's scratch, once per version of the orders table.
+    The directory layout IS the index: any later reader that filters on
+    o_orderpriority prunes whole directories before reading a byte of
+    data."""
     import os
 
     from ngram_analytics_spark.sources import write
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    path = os.path.join(
-        warehouse.removeprefix("file:"), f"orders_by_prio_{tag}"
-    )
+    path = scratch("orders_by_prio", sf_dir, "orders")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         write(
             load(spark, sf_dir, "orders"),

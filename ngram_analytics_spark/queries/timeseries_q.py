@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ngram_analytics_spark.catalog import load
+from ngram_analytics_spark.catalog import load, scratch
 from ngram_analytics_spark.functions.deterministic import (
     dsum_fixed,
     oracle_davg,
@@ -636,13 +636,10 @@ def q_stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a stream when the sink has no native MERGE: foreachBatch
     gives the batch DataFrame API inside each micro-batch. Sums ride
     fixed-point int64 ticks so merge order cannot move a ulp."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"nas-upsert-{tag}")
+    base = scratch("foreach_upsert", sf_dir)
     stage, state = os.path.join(base, "in"), os.path.join(base, "state")
     # fresh run each call: foreachBatch state is per-invocation
     shutil.rmtree(base, ignore_errors=True)
@@ -1718,30 +1715,10 @@ def q_stream_foreach_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     state == one-shot batch aggregate == the shared oracle.
 
     Determinism: integer counts; merge order cannot move max/sum."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    parent = os.path.join(tempfile.gettempdir(), f"nas-ab-{tag}")
-    # app-id isolation (the q_schema_evolution discipline): two
-    # concurrent sessions on one host must not clobber each other's
-    # staged input / state snapshot / checkpoint mid-stream; stale
-    # sibling dirs (> 1 h untouched, i.e. finished sessions) are
-    # reaped so short-lived grading sessions don't accumulate
-    base = os.path.join(parent, spark.sparkContext.applicationId)
-    if os.path.isdir(parent):
-        import time as _time
-
-        cutoff = _time.time() - 3600
-        for stale in os.listdir(parent):
-            sp = os.path.join(parent, stale)
-            try:
-                if sp != base and os.path.getmtime(sp) < cutoff:
-                    shutil.rmtree(sp, ignore_errors=True)
-            except OSError:
-                pass
+    base = scratch("foreach_ab", sf_dir)
     stage, state = os.path.join(base, "in"), os.path.join(base, "state")
     # fresh run each call: foreachBatch state is per-invocation
     shutil.rmtree(base, ignore_errors=True)

@@ -62,13 +62,16 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_cols: list[str],
+    path: str,
     n_buckets: int = 32,
     mode: str = "overwrite",
 ) -> None:
-    """Bucketed managed table: joins/aggs on the bucket key later skip
-    the shuffle entirely (co-located partitioning persisted on disk)."""
+    """Bucketed table ``table``, stored at ``path``: joins/aggs on the
+    bucket key later skip the shuffle entirely (co-located partitioning
+    persisted on disk)."""
     (
         df.write.mode(mode)
+        .option("path", path)
         .bucketBy(n_buckets, *bucket_cols)
         .sortBy(*bucket_cols)
         .format("parquet")

@@ -51,7 +51,15 @@ def _doc_row(d: int) -> tuple[int, str, int]:
 
 
 def register_synthetic_docs(spark) -> None:
-    """Register the 'synthetic_docs' format on this session (idempotent)."""
+    """Register the 'synthetic_docs' format on this session (idempotent).
+
+    The source's classes reach this module's helpers, and the Python
+    workers that unpickle them may not be able to import the package
+    (a program that put it on ``sys.path`` itself), so the module is
+    pickled by value."""
+    import sys
+
+    from pyspark import cloudpickle
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceReader,
@@ -89,6 +97,7 @@ def register_synthetic_docs(spark) -> None:
         def reader(self, schema):
             return SyntheticDocsReader(self.options)
 
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(SyntheticDocsSource)
 
 

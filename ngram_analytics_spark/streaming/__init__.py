@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ngram_analytics_spark import catalog
 
 
-def _stage(sf_dir: str, name: str, prefix: str) -> str:
+def _stage(sf_dir: str, name: str) -> str:
     """Scratch directory of symlinks to table ``name``'s data files.
 
     Spark's file stream source requires a *directory*; the testdata dir
@@ -32,27 +32,19 @@ def _stage(sf_dir: str, name: str, prefix: str) -> str:
     data file (read-only testdata is never touched). The generated
     corpora ship a table as a single FILE; a Spark-written table is a
     DIRECTORY of part files the file source won't recurse into through
-    one symlink, so those are staged individually.
+    one symlink, so those are staged individually. The directory is
+    keyed by the table's identity (``catalog.scratch``), so every link
+    already in it points at the file it names.
     """
     import contextlib
-    import hashlib
     import os
-    import tempfile
 
     # abspath: a relative sf_dir would otherwise create a symlink that
-    # resolves relative to the scratch dir (broken), and the broken
-    # link fails os.path.exists yet still collides on re-create.
+    # resolves relative to the scratch dir (broken)
     src = os.path.abspath(catalog.table_path(sf_dir, name))
-    tag = hashlib.sha1(src.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"{prefix}-{tag}")
+    stage = catalog.scratch(f"stream_{name}", sf_dir, name)
     os.makedirs(stage, exist_ok=True)
     if os.path.isdir(src):
-        # drop a single symlink named after the source DIRECTORY (an
-        # older staging layout) — inert today (the file source ignores
-        # directory links) but a recursion/listing change would
-        # double-read it
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(os.path.join(stage, os.path.basename(src)))
         parts = [
             os.path.join(src, fn)
             for fn in sorted(os.listdir(src))
@@ -61,28 +53,10 @@ def _stage(sf_dir: str, name: str, prefix: str) -> str:
     else:
         parts = [src]
     for p in parts:
-        _link(p, os.path.join(stage, os.path.basename(p)))
+        # threads of one process may stage the same table at once
+        with contextlib.suppress(FileExistsError):
+            os.symlink(p, os.path.join(stage, os.path.basename(p)))
     return stage
-
-
-def _link(target: str, link: str) -> None:
-    """Make ``link`` a symlink to ``target``. Concurrent first uses of
-    one stage may race here: a link that already resolves to
-    ``target`` is accepted, and a stale one is replaced by an atomic
-    rename of a fresh link (dot-named, so a stream listing the stage
-    meanwhile skips it)."""
-    import os
-    import uuid
-
-    try:
-        os.symlink(target, link)
-    except FileExistsError:
-        if os.path.realpath(link) == os.path.realpath(target):
-            return
-        head, tail = os.path.split(link)
-        tmp = os.path.join(head, f".{tail}.{uuid.uuid4().hex}")
-        os.symlink(target, tmp)
-        os.replace(tmp, link)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,7 +69,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization as ``catalog.load`` (applying the ns->us division to
     a micros column would shift every event to 1970).
     """
-    stage = _stage(sf_dir, "events", "nas-stream")
+    stage = _stage(sf_dir, "events")
     return catalog.read_stream(spark, sf_dir, "events", stage)
 
 
@@ -103,7 +77,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents parquet (the streaming
     twin of catalog.load("documents")), with the table's stored
     schema."""
-    stage = _stage(sf_dir, "documents", "nas-docstream")
+    stage = _stage(sf_dir, "documents")
     return catalog.read_stream(spark, sf_dir, "documents", stage)
 
 

@@ -135,6 +135,105 @@ def test_pin_keeps_batch_partitions_and_halves_stream_state(spark, tmp_path):
     assert {op["numShufflePartitions"] for op in ops} == {want}
 
 
+@pytest.fixture
+def scratch_tmp(monkeypatch, tmp_path):
+    """An empty temp dir that ``catalog.scratch`` has not set up yet."""
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    return tmp
+
+
+def test_scratch_root_is_the_process_own_under_tempdir(scratch_tmp):
+    path = catalog.scratch("runs", SF_SMOKE)
+    root = scratch_tmp / f"nas-scratch-{os.getpid()}"
+    assert os.path.dirname(path) == str(root)
+    assert os.path.basename(path).startswith("runs-")
+    assert root.is_dir()
+    assert not os.path.exists(path)  # only the root is created
+
+
+def test_scratch_path_moves_only_with_its_tables(scratch_tmp, tmp_path):
+    import shutil
+
+    sf = tmp_path / "sf0.001"
+    sf.mkdir()
+    for t in ("orders", "lineitem"):
+        shutil.copy(catalog.table_path(SF_SMOKE, t), sf / f"{t}.parquet")
+    first = catalog.scratch("copy", str(sf), "orders")
+    assert catalog.scratch("copy", str(sf), "orders") == first
+    assert catalog.scratch("other", str(sf), "orders") != first
+    # another corpus of the same name is another copy
+    assert catalog.scratch("copy", SF_SMOKE, "orders") != first
+
+    # rewriting a table it does not name leaves the path alone
+    shutil.copy(sf / "lineitem.parquet", tmp_path / "li.new")
+    os.replace(tmp_path / "li.new", sf / "lineitem.parquet")
+    assert catalog.scratch("copy", str(sf), "orders") == first
+    # rewriting one it names moves it
+    shutil.copy(sf / "orders.parquet", tmp_path / "o.new")
+    os.replace(tmp_path / "o.new", sf / "orders.parquet")
+    second = catalog.scratch("copy", str(sf), "orders")
+    assert second != first
+    assert catalog.scratch("copy", str(sf), "orders") == second
+
+
+def test_scratch_reaps_roots_of_exited_processes(scratch_tmp):
+    import subprocess
+    import sys
+
+    done = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True)
+    dead = scratch_tmp / f"nas-scratch-{int(done.stdout)}"
+    live = scratch_tmp / f"nas-scratch-{os.getppid()}"
+    other = scratch_tmp / "nas-scratch-notapid"
+    for d in (dead, live, other):
+        (d / "copy-0").mkdir(parents=True)
+    catalog.scratch("runs", SF_SMOKE)
+    assert not dead.exists()
+    assert live.is_dir() and other.is_dir()
+
+
+def test_derived_copies_follow_rewritten_tables(spark, registry, tmp_path):
+    """The partitioned and bucketed copies of orders and lineitem are
+    rebuilt when those tables are rewritten in place: every key that
+    reads a copy matches its oracle before and after the rewrite."""
+    import shutil
+
+    import duckdb
+
+    from ngram_analytics_spark.testing import compare, duck_result, spark_result
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_SMOKE, sf)
+    os.chmod(sf, 0o755)
+    keys = ("q_scan_partitioned", "q_join_dpp", "q_join_bucketed")
+    con = duckdb.connect()
+    try:
+        for t in catalog.TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                        f"read_parquet('{catalog.table_path(str(sf), t)}')")
+
+        def check(when):
+            for k in keys:
+                got = spark_result(registry.queries[k](spark, str(sf)))
+                problems = compare(*got, *duck_result(con, registry.oracles[k]))
+                assert not problems, f"{k} {when}: " + "\n".join(problems)
+
+        check("before the rewrite")
+        for t, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+            path = catalog.table_path(str(sf), t)
+            new = str(tmp_path / f"{t}.new.parquet")
+            con.execute(f"COPY (SELECT * FROM read_parquet('{path}') "
+                        f"WHERE {key} % 2 = 0) TO '{new}' (FORMAT parquet)")
+            os.replace(new, path)
+        check("after the rewrite")
+    finally:
+        con.close()
+
+
 @pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_CORRECT])
 def test_lineitem_partkey_references_part(sf_dir):
     """q_basket_lift counts its order total over lineitem rows joined to

@@ -268,3 +268,43 @@ def test_no_conf_set_outside_the_session_pin():
     for path in sorted(pkg.rglob("*.py")):
         scan(ast.parse(path.read_text()), str(path.relative_to(pkg)), None)
     assert not found, f".conf.set( outside the session pin: {found}"
+
+
+def test_no_scratch_paths_outside_catalog_scratch():
+    """Every on-disk working directory of the package comes from
+    ``catalog.scratch``: one root per process, keyed by the tables a
+    copy is made from, removed at exit. Temp-dir lookups, exit hooks,
+    ``/tmp`` literals, the warehouse dir and application ids anywhere
+    else would bring back a second naming rule or lifetime."""
+    import ast
+
+    pkg = REPO / "ngram_analytics_spark"
+    names = {"tempfile", "atexit", "applicationId"}
+    found = []
+
+    def bad(node) -> bool:
+        if isinstance(node, ast.Import):
+            return any(a.name.split(".")[0] in names for a in node.names)
+        if isinstance(node, ast.ImportFrom):
+            return (node.module or "").split(".")[0] in names
+        if isinstance(node, ast.Name):
+            return node.id in names
+        if isinstance(node, ast.Attribute):
+            return node.attr in names
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return (node.value.startswith("/tmp")
+                    or "spark.sql.warehouse.dir" in node.value)
+        return False
+
+    def scan(node, rel, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scan(child, rel, child.name)
+                continue
+            if bad(child) and (rel, owner) != ("catalog.py", "scratch"):
+                found.append(f"{rel}:{child.lineno} in {owner}")
+            scan(child, rel, owner)
+
+    for path in sorted(pkg.rglob("*.py")):
+        scan(ast.parse(path.read_text()), str(path.relative_to(pkg)), None)
+    assert not found, f"scratch paths outside catalog.scratch: {found}"

@@ -163,6 +163,42 @@ def test_python_datasource_partitions_and_determinism(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
+def test_python_datasource_unpickles_without_the_package(tmp_path):
+    """Spark's Python workers unpickle the registered source, and they
+    may not be able to import the package (a program that put it on
+    ``sys.path`` itself). The pickled source must carry what it needs.
+    No Spark session starts here."""
+    import os
+    import subprocess
+    import sys
+    import types
+
+    from pyspark import cloudpickle
+
+    from ngram_analytics_spark.sources.pyds import _doc_row, register_synthetic_docs
+
+    got = []
+    register_synthetic_docs(
+        types.SimpleNamespace(dataSource=types.SimpleNamespace(register=got.append))
+    )
+    blob = tmp_path / "source.pkl"
+    blob.write_bytes(cloudpickle.dumps(got[0]))
+    code = (
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('ngram_analytics_spark') is None\n"
+        "src = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "reader = src({'n_docs': '10', 'n_partitions': '3'}).reader(None)\n"
+        "print(sorted(r for p in reader.partitions() for r in reader.read(p)))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(blob)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == repr(sorted(_doc_row(d) for d in range(10)))
+
+
 def test_parquet_compression_codecs_roundtrip(spark, tmp_path):
     """Every bundled parquet codec (zstd/snappy/gzip/lz4) must write
     and read back losslessly — codec choice is a first-class knob for
