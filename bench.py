@@ -1,9 +1,12 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
-Execution is measured end-to-end per query with a `noop` sink — the
-full plan runs JVM-side (scan -> ... -> materialize every row) without
-collect/driver serialization distorting the numbers.
+Every query runs through ``telemetry.run_query``, which builds it and
+writes it to a `noop` sink — the full plan runs JVM-side (scan -> ...
+-> materialize every row) without collect/driver serialization
+distorting the numbers. A headline query's time is its ``exec_s``.
+The default full run also writes ``bench_detail.json``: the telemetry
+census (one warm and one timed run each) of the EXTENDED keys.
 
 Usage: python bench.py [--warm] [query ...]
 """
@@ -13,7 +16,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 
 #: Host-drift sentinel (VERDICT r8 "Next round" item 3): three pinned,
@@ -55,7 +57,7 @@ HEADLINE = [
     "q_udf_pandas",       # Arrow UDF path
 ]
 
-#: round-3 families, timed with the same methodology but kept OUT of
+#: round-3 families, censused into bench_detail.json and kept OUT of
 #: the headline total so that number stays comparable to BASELINE.md
 #: and to prior rounds (same 18-query denominator).
 EXTENDED = [
@@ -299,12 +301,11 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-    import __spark_entry__ as e
     from ngram_analytics_spark.session import get_spark
+    from ngram_analytics_spark.telemetry import census, run_query
 
     spark = get_spark(app_name="nas-bench")
-    qs = e.queries()
-    names = args or [n for n in HEADLINE if n in qs]
+    names = args or HEADLINE
 
     # OS page-cache warmup: q_scan_count prunes to a single column, so on a
     # cold boot the wide columns (documents.text, embeddings.embedding)
@@ -318,180 +319,30 @@ def main() -> int:
                 pass
 
     # JVM/codegen warmup so the first measured query isn't penalized.
-    qs["q_scan_count"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    run_query(spark, "q_scan_count", sf_dir)
 
     # Each query is timed across INTERLEAVED passes (A,B,...,A,B,...)
     # and the MIN is reported: single-run numbers mix plan quality with
     # JIT-compile timing, GC phase and host noise (measured spread on
-    # an otherwise-idle box: up to 2x on identical plans; this host has
-    # invisible multi-second load spikes). Interleaving means a spike
-    # spans ONE pass, not both runs of one query; any query whose
-    # max/min spread still exceeds 2x gets extra runs until the spread
-    # closes or a retry cap is hit. The min approximates steady-state
-    # engine throughput — what a long-running cluster actually sustains.
-    # 3 interleaved base passes (was 2): with 2, a load spike spanning
-    # both passes of one query publishes an inflated min that the
-    # 1.5x-agreement retry cannot detect (both runs agree — both
-    # wrong). A third pass widens the window a spike must cover.
-    # Headline queries time PRE-CONSTRUCTED plans (write only): none
-    # of them localCheckpoints at construction, and the BASELINE.md
-    # 6.8 s anchor plus every prior round's record was measured this
-    # way — in-timer construction adds ~0.15 s/query of Python plan
-    # building (measured 6.5 -> 10.0 s total), which is harness, not
-    # engine. The EXTENDED set constructs in-timer instead (below).
+    # an otherwise-idle box: up to 2x on identical plans). Interleaving
+    # means a load spike spans ONE pass, not every run of one query;
+    # three passes widen the window a spike must cover. The time is the
+    # execution phase only: the BASELINE.md 6.8 s anchor and every
+    # earlier record timed pre-built plans, and in-timer construction
+    # adds ~0.15 s/query of Python plan building (measured 6.5 -> 10.0 s
+    # total), which is harness, not engine.
     n_passes = 1 if warm else 3
-    dfs = {name: qs[name](spark, sf_dir) for name in names}
     if warm:
-        for df in dfs.values():
-            df.write.format("noop").mode("overwrite").save()
-
-    def timed_run(name: str) -> float:
-        t0 = time.perf_counter()
-        dfs[name].write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
+        for name in names:
+            run_query(spark, name, sf_dir)
     runs: dict[str, list[float]] = {name: [] for name in names}
     for _ in range(n_passes):
         for name in names:
-            runs[name].append(timed_run(name))
-    # A recorded min is only trustworthy if a second run lands near it:
-    # retry until the two best runs agree within 1.5x (or a cap), so a
-    # spike that inflated every pass of one query can't publish a 6x
-    # number the way round-1's q_sim_knn artifact did.
-    retried: list[str] = []
-    if not warm:
-        for name in names:
-            for _ in range(3):
-                best2 = sorted(runs[name])[:2]
-                if best2[1] <= 1.5 * best2[0]:
-                    break
-                runs[name].append(timed_run(name))
-                if name not in retried:
-                    retried.append(name)
-    timings = {name: round(min(runs[name]), 3) for name in names}
-
-    # extended (non-headline) set: min of 2 interleaved passes, only in
-    # the default full run (not --warm, not an explicit query list).
-    extended: dict[str, float] = {}
-    espread: dict[str, float] = {}
-    eretried: list[str] = []
-    stream_split: dict[str, dict] = {}
-    if not warm and not args:
-        ext = [n for n in EXTENDED if n in qs]
-
-        # Extended queries construct INSIDE the timer (matching
-        # tools/time_queries.py, which produced BASELINE.md's sf-ratio
-        # rows): graph-family queries run their eager localCheckpoint
-        # kernels at construction, so write-only timing under-reports
-        # them (q_graph_kcore read 0.11 s vs 2.4 s real — the
-        # BASELINE.md graph-family honesty note).
-        # streaming startup/processing split (VERDICT r11 item 5):
-        # run_to_memory appends a split record per stream it drives;
-        # snapshotting the list around each timed call attributes the
-        # new records to that query, so the detail sidecar can show
-        # whether a q_stream_live_* delta is fixed micro-batch startup
-        # or real per-row processing.
-        from ngram_analytics_spark import streaming as _streaming
-
-        esplits: dict[str, list[tuple[float, list[dict]]]] = {}
-
-        def etimed(n: str) -> float:
-            mark = len(_streaming.STREAM_RUNS)
-            t0 = time.perf_counter()
-            qs[n](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t = time.perf_counter() - t0
-            new = _streaming.STREAM_RUNS[mark:]
-            if new:
-                esplits.setdefault(n, []).append((t, list(new)))
-            return t
-
-        eruns: dict[str, list[float]] = {n: [] for n in ext}
-        for _ in range(2):
-            for n in ext:
-                eruns[n].append(etimed(n))
-        # Contention escalation (VERDICT r5 "What's wrong" §3): with
-        # only 2 interleaved passes, a host load spike spanning both
-        # passes of one query publishes an inflated min that reads as
-        # a plan regression (r5 official record: q_winsorize 13.26 s
-        # vs 1.73 s judge steady-state). Any query whose two best runs
-        # disagree by >2x gets up to 3 extra runs until they agree;
-        # per-query max/min spread is recorded so the driver can flag
-        # unstable measurements itself.
-        for n in ext:
-            for _ in range(3):
-                best2 = sorted(eruns[n])[:2]
-                if best2[1] <= 2.0 * best2[0]:
-                    break
-                eruns[n].append(etimed(n))
-                if n not in eretried:
-                    eretried.append(n)
-        extended = {n: round(min(r), 3) for n, r in eruns.items()}
-        espread = {
-            n: round(max(r) / min(r), 2) for n, r in eruns.items()
-        }
-        # publish the split of each streaming key's BEST (min-wall)
-        # run — the run the extended timing itself reports
-        for n, rec in esplits.items():
-            _, streams = min(rec, key=lambda x: x[0])
-            stream_split[n] = {
-                "startup_s": round(
-                    sum(s["startup_s"] for s in streams), 3
-                ),
-                "process_s": round(
-                    sum(s["process_s"] for s in streams), 3
-                ),
-                "n_batches": sum(s["n_batches"] for s in streams),
-                "n_streams": len(streams),
-            }
+            runs[name].append(run_query(spark, name, sf_dir)["exec_s"])
+    timings = {name: round(min(r), 3) for name, r in runs.items()}
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Detail (extended timings, run counts, retries) goes ONLY to the
-    # bench_detail.json sidecar — NEVER to stdout.  History: round 4
-    # inlined the 76-entry extended dict in the final JSON and the
-    # driver's bounded tail capture voided the record (BENCH_r04
-    # parsed: null); round 7 printed the detail on an earlier stdout
-    # line and the tail sliced it so 57 extended_spread RATIOS read as
-    # per-query seconds (VERDICT r7 "What's wrong" §1).  Stdout now
-    # carries exactly one JSON line — the compact headline — so no tail
-    # window of any size can capture anything else
-    # (tests/test_docs.py::test_bench_stdout_is_headline_only).
-    detail = {
-        "metric": "bench_detail",
-        "base_passes": n_passes,
-        "runs_per_query": {n: len(r) for n, r in runs.items()},
-        "interleaved_passes": True,
-        "retried": retried,
-        "aggregation": "min",
-        "extended_queries": extended,
-        "extended_total": round(sum(extended.values()), 3),
-        "extended_retried": eretried,
-        "extended_spread": espread,
-        "stream_split": stream_split,
-        "sf": sf_val,
-    }
-    # De-drifted extended total (VERDICT r9 "What's wrong" §4 minor):
-    # the headline's host-drift sentinel applies to the extended set
-    # too — record total/drift so extended erosion is adjudicable
-    # without a manual idle re-run.
-    if all(s in timings for s in DRIFT_SENTINELS) and extended:
-        drift = round(
-            sum(timings[s] for s in DRIFT_SENTINELS)
-            / DRIFT_ANCHOR_TOTAL,
-            2,
-        )
-        detail["drift"] = drift
-        detail["extended_total_dedrifted"] = round(
-            detail["extended_total"] / drift, 3
-        )
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "bench_detail.json"),
-        "w",
-    ) as f:
-        json.dump(detail, f, indent=1)
     headline = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
@@ -504,6 +355,28 @@ def main() -> int:
             sum(timings[s] for s in DRIFT_SENTINELS) / DRIFT_ANCHOR_TOTAL,
             2,
         )
+    # Detail goes ONLY to the bench_detail.json sidecar — NEVER to
+    # stdout. History: round 4 inlined the 76-entry extended dict in
+    # the final JSON and the driver's bounded tail capture voided the
+    # record (BENCH_r04 parsed: null); round 7 printed the detail on an
+    # earlier stdout line and the tail sliced it so 57 ratios read as
+    # per-query seconds (VERDICT r7 "What's wrong" §1). Stdout carries
+    # exactly one JSON line — the compact headline — so no tail window
+    # of any size can capture anything else
+    # (tests/test_docs.py::test_bench_stdout_is_headline_only).
+    if not warm and not args:
+        detail = {
+            "metric": "bench_detail",
+            "sf": sf_val,
+            "drift": headline.get("drift"),
+            "census": list(census(spark, sf_dir, EXTENDED)),
+        }
+        with open(
+            os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         "bench_detail.json"),
+            "w",
+        ) as f:
+            json.dump(detail, f, indent=1)
     print(json.dumps(headline))
     return 0
 

@@ -139,7 +139,8 @@ def ivf_knn(
     # spread the corpus-side assignment (r15): the n_cells-way cosine
     # scoring runs map-side below the rank window's exchange, so a
     # single-split scan otherwise carries ALL of it on one task
-    # (stageprof: 1.78 s of q_sim_ann_ivf_exact's 4.75 s wall at
+    # (stage record of telemetry.run_query: 1.78 s of
+    # q_sim_ann_ivf_exact's 4.75 s wall at
     # sf0.1) — the same guard brute_force_knn has carried since r10;
     # no-op on many-split inputs, values rank-deterministic.
     assigned = nearest_cells(

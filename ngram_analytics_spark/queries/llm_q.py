@@ -176,8 +176,9 @@ def q_dedup_fuzzy_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the brute-force kernel instead of SQL.
 
     spread() before the kernel (r15): the single-row-group corpus file
-    scans as ONE task, and stageprof showed that one task carrying the
-    whole shingle+postings build (5.5 s of the 6.9 s wall at sf0.1);
+    scans as ONE task, and the stage record of telemetry.run_query
+    shows that one task carrying the whole shingle+postings build
+    (5.5 s of the 6.9 s wall at sf0.1);
     the pair set is order-free (in-array a<b expansion + distinct), so
     the round-robin exchange changes no value."""
     from ngram_analytics_spark.operators import spread

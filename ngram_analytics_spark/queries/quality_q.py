@@ -579,8 +579,8 @@ def q_fn_xpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     remains to exercise that accessor family. spread() (r15): the
     per-row XML build+parse otherwise runs entirely on the single
     scan task of the one-split local file (2.4 s of the 2.6 s wall
-    at sf0.1, stageprof); no-op on many-split inputs, per-row values
-    unchanged."""
+    at sf0.1, in the stage record of telemetry.run_query); no-op on
+    many-split inputs, per-row values unchanged."""
     from ngram_analytics_spark.operators import spread
 
     p = spread(load(spark, sf_dir, "part"))

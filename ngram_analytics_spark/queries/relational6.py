@@ -846,7 +846,8 @@ def q_fn_map2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spread() (r15): the map HOFs are interpreted, and the single-
     row-group local file ran all of them on ONE scan task (2.8 s of
-    the 3.2 s wall at sf0.1, stageprof); the narrow round-robin
+    the 3.2 s wall at sf0.1, in the stage record of
+    telemetry.run_query); the narrow round-robin
     exchange is a no-op on any many-split input and the projection
     is per-row, so values are unchanged."""
     from ngram_analytics_spark.operators import spread

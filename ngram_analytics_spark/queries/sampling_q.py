@@ -917,7 +917,8 @@ def q_sample_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the explode multiplies the SCAN, not the shuffle:
     aggregate state is |type| x {b} integers. spread() (r15) keeps
     the x{b} md5 work plan-wide when the local file scans as one
-    split (stageprof: a single task carried 1.7 s of the 2.4 s wall
+    split (the stage record of telemetry.run_query: a single task
+    carried 1.7 s of the 2.4 s wall
     at sf0.1) — a no-op on any many-split input."""
     from ngram_analytics_spark.operators import spread
 

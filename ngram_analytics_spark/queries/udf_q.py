@@ -196,8 +196,9 @@ def q_udtf_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.udtf.register("poly_ngram_udtf", udtf(PolyNGram))
     # spread() (r15): eval() is per-row Python, and the single-split
     # local file otherwise runs the whole LATERAL expansion on ONE
-    # task (0.47 s of the 0.70 s wall, stageprof); no-op on
-    # many-split inputs, per-row values unchanged.
+    # task (0.47 s of the 0.70 s wall in the stage record of
+    # telemetry.run_query); no-op on many-split inputs, per-row
+    # values unchanged.
     from ngram_analytics_spark.operators import spread
 
     spread(load(spark, sf_dir, "documents")).createOrReplaceTempView(
@@ -322,9 +323,10 @@ def q_udf_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions by BYTES, and the per-key pandas stage's cost is
     per-KEY Python dispatch, so the ~400 KB shuffle coalesced to ONE
     partition and all ~1.5 k per-user calls ran serially on one core
-    (stageprof: a single 4.2 s task). Pinning the partition count
-    floors Python-stage parallelism at the core count on any cluster
-    size — interleaved A/B at sf0.1: 4.67 -> 0.98 s, identical rows."""
+    (the stage record of telemetry.run_query: a single 4.2 s task).
+    Pinning the partition count floors Python-stage parallelism at
+    the core count on any cluster size — interleaved A/B at sf0.1:
+    4.67 -> 0.98 s, identical rows."""
     import pandas as pd
 
     ev = load(spark, sf_dir, "events")

@@ -8,8 +8,8 @@ Scale design notes (100 TB):
   broadcast decisions survive bad static estimates at cluster scale.
 - ``spark.sql.shuffle.partitions`` is a local-mode default only; on a
   real cluster AQE's coalescing makes the static value far less
-  critical. Set it at build time (``extra_conf``): no query changes a
-  conf per call, because every caller of the session would see the
+  critical. It is fixed when the session is built: no query changes
+  a conf per call, because every caller of the session would see the
   change. On a session's first load the catalog moves the value to
   AQE's initial partition number, which batch queries plan with, and
   leaves half the cores for stateful streams (``catalog._pin``).
@@ -56,7 +56,6 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
 def get_spark(
     app_name: str = "ngram-analytics-spark",
     master: str | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession."""
     active = SparkSession.getActiveSession()
@@ -79,7 +78,7 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
         )
     )
-    for k, v in {**SESSION_CONF, **(extra_conf or {})}.items():
+    for k, v in SESSION_CONF.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -131,14 +131,17 @@ def running_user_counts(events: DataFrame) -> DataFrame:
     )
 
 
-#: per-stream timing splits appended by run_to_memory, in call order.
-#: bench.py and perfbench/run.py take the list length before a timed
-#: stretch and attribute the entries added after it to that stretch,
+#: per-stream timing splits appended by run_to_memory, in call order,
 #: so the ~1.3-4.3 s fixed micro-batch startup cannot mask a
 #: processing regression. Each entry: {"name" (the run's sink name),
+#: "job_group" (the calling thread's Spark job group, or None),
 #: "wall_s", "process_s" (sum of triggerExecution across
 #: micro-batches), "startup_s" (wall - process: plan/compile/source
-#: listing/sink setup), "n_batches"}.
+#: listing/sink setup), "n_batches"}. ``telemetry.run_query`` picks a
+#: query's streams by its job groups, which neither another thread's
+#: streams nor the trim in run_to_memory can shift; perfbench/run.py
+#: attributes the entries added after a list-length mark to its timed
+#: stretch.
 STREAM_RUNS: list[dict] = []
 
 
@@ -181,6 +184,7 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFr
     STREAM_RUNS.append(
         {
             "name": name,
+            "job_group": sess.sparkContext.getLocalProperty("spark.jobGroup.id"),
             "wall_s": round(wall, 3),
             "process_s": round(process, 3),
             "startup_s": round(max(0.0, wall - process), 3),
@@ -188,8 +192,7 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFr
         }
     )
     # bounded diagnostics: a long-lived session driving thousands of
-    # streams must not accumulate records forever (bench snapshots
-    # list offsets within one run, far below this cap)
+    # streams must not accumulate records forever
     if len(STREAM_RUNS) > 4096:
         del STREAM_RUNS[:-2048]
     return rows

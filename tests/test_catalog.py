@@ -5,33 +5,20 @@ tests/test_streaming.py.)"""
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 
 from ngram_analytics_spark import catalog
 from ngram_analytics_spark import sources as S
+from ngram_analytics_spark import telemetry
 from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def _jobs_in(spark, group: str, fn) -> int:
-    """Spark jobs ``fn`` submits, counted from the status tracker. A
-    marker job in a second group runs afterwards; the listener bus is
-    FIFO, so once the marker is visible every job of ``fn`` is too."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    try:
-        sc.setJobGroup(group, group)
+    """Spark jobs ``fn`` submits, counted by the package's job counter."""
+    with telemetry.job_group(spark, group, group):
         fn()
-        sc.setJobGroup(f"{group}-marker", group)
-        sc.parallelize([0], 1).count()
-    finally:
-        sc._jsc.clearJobGroup()
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup(f"{group}-marker"):
-        assert time.time() < deadline, "marker job never reached the tracker"
-        time.sleep(0.05)
-    return len(tracker.getJobIdsForGroup(group))
+    return len(telemetry.jobs_of(spark, group)[group])
 
 
 def test_second_load_submits_no_job(spark, tmp_path):

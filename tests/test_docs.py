@@ -189,13 +189,14 @@ def test_every_power_sum_documents_its_headroom():
 def test_every_public_helper_has_a_caller():
     """Dead-helper lint: every public top-level function of the
     operator, function, plan, source and streaming layers (and of
-    ``catalog`` and ``session``) must be referenced somewhere other
-    than its own ``def`` — by the package, the tests, ``tools/``,
-    ``perfbench/`` or ``__spark_entry__.py``.  A helper nothing calls
-    is an untested second path that still has to be read and kept in
-    step; delete it instead.  References are AST names, attributes and
-    import aliases, so a mention in a docstring or comment does not
-    count, and neither does a recursive call inside the helper."""
+    ``catalog``, ``session`` and ``telemetry``) must be referenced
+    somewhere other than its own ``def`` — by the package, the tests,
+    ``tools/``, ``perfbench/`` or ``__spark_entry__.py``.  A helper
+    nothing calls is an untested second path that still has to be read
+    and kept in step; delete it instead.  References are AST names,
+    attributes and import aliases, so a mention in a docstring or
+    comment does not count, and neither does a recursive call inside
+    the helper."""
     import ast
     from collections import Counter
 
@@ -204,7 +205,7 @@ def test_every_public_helper_has_a_caller():
         p
         for d in ("operators", "functions", "plans", "sources", "streaming")
         for p in sorted((pkg / d).rglob("*.py"))
-    ] + [pkg / "catalog.py", pkg / "session.py"]
+    ] + [pkg / "catalog.py", pkg / "session.py", pkg / "telemetry.py"]
     searched = (
         sorted(pkg.rglob("*.py"))
         + sorted((REPO / "perfbench").rglob("*.py"))
@@ -268,6 +269,32 @@ def test_no_conf_set_outside_the_session_pin():
     for path in sorted(pkg.rglob("*.py")):
         scan(ast.parse(path.read_text()), str(path.relative_to(pkg)), None)
     assert not found, f".conf.set( outside the session pin: {found}"
+
+
+def test_no_job_groups_or_status_reads_outside_telemetry():
+    """Spark job groups and the driver's status tracker and store
+    belong to ``telemetry``: a second place that sets a job group would
+    retag the runner's phases under it, and a second reader of the
+    tracker would be a second way of counting a query's jobs. The
+    package, ``bench.py`` and ``tools/`` are scanned; tests and
+    ``perfbench/`` are exempt."""
+    import ast
+
+    names = {"setJobGroup", "setJobDescription", "statusTracker", "statusStore"}
+    pkg = REPO / "ngram_analytics_spark"
+    files = (
+        sorted(pkg.rglob("*.py"))
+        + sorted((REPO / "tools").rglob("*.py"))
+        + [REPO / "bench.py"]
+    )
+    found = [
+        f"{path.relative_to(REPO)}:{node.lineno} {node.attr}"
+        for path in files
+        if path != pkg / "telemetry.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr in names
+    ]
+    assert not found, f"job groups or status reads outside telemetry: {found}"
 
 
 def test_no_scratch_paths_outside_catalog_scratch():

@@ -243,14 +243,19 @@ def test_leaderboard_state_invariant_to_batch_splits(spark, tmp_path):
 def test_run_to_memory_records_timing_split(spark):
     """VERDICT r11 item 5: every run_to_memory drive must append ONE
     STREAM_RUNS record whose startup + process partition the measured
-    wall (bench.py attributes these to the q_stream_live_* keys so the
-    fixed micro-batch startup stops masking processing regressions)."""
+    wall, tagged with the caller's job group (``telemetry.run_query``
+    attributes these to the q_stream_live_* keys so the fixed
+    micro-batch startup stops masking processing regressions)."""
+    from ngram_analytics_spark.telemetry import job_group
+
     mark = len(S.STREAM_RUNS)
     stream = S.tumbling_counts(S.read_events_stream(spark, SF_SMOKE))
-    out = S.run_to_memory(stream, output_mode="complete")
+    with job_group(spark, "split-pin", "split pin"):
+        out = S.run_to_memory(stream, output_mode="complete")
     new = S.STREAM_RUNS[mark:]
     assert len(new) == 1
     r = new[0]
+    assert r["job_group"] == "split-pin"
     # the record names the sink the returned frame reads
     analyzed = out._jdf.queryExecution().analyzed().toString()
     assert f"SubqueryAlias {r['name']}\n" in analyzed, analyzed
@@ -265,14 +270,17 @@ def test_live_streams_share_one_session(
     spark, duck, registry, stage, monkeypatch, tmp_path
 ):
     """Two threads released together run live keys on one session:
-    q_stream_live_tumbling twice and q_stream_live_dedup once. Every
-    run gets its own sink and matches its oracle, and the session's
-    shuffle partition count is the same afterwards. ``cold`` points
-    the temp dir at an empty one, so both threads stage the events
-    table at the same moment."""
+    q_stream_live_tumbling twice and q_stream_live_dedup once, each
+    once directly and once through ``telemetry.run_query``. Every run
+    gets its own sink and matches its oracle, each runner record lists
+    exactly the stream its own call ran, and the session's shuffle
+    partition count is the same afterwards. ``cold`` points the temp
+    dir at an empty one, so both threads stage the events table at the
+    same moment."""
     import tempfile
     import threading
 
+    from ngram_analytics_spark.telemetry import run_query
     from ngram_analytics_spark.testing import compare, duck_result, spark_result
 
     if stage == "cold":
@@ -283,13 +291,14 @@ def test_live_streams_share_one_session(
         ["q_stream_live_tumbling"],
     )
     barrier = threading.Barrier(len(plans), timeout=120)
-    results, errors = [], []
+    results, records, errors = [], [], []
 
     def drive(keys):
         try:
             barrier.wait()
             for k in keys:
                 results.append((k, spark_result(registry.queries[k](spark, SF_SMOKE))))
+                records.append(run_query(spark, k, SF_SMOKE))
         except Exception as e:  # reported below, in the test's thread
             errors.append(f"{keys}: {type(e).__name__}: {e}")
 
@@ -305,4 +314,7 @@ def test_live_streams_share_one_session(
         problems = compare(scols, srows, *duck_result(duck, registry.oracles[k]))
         assert not problems, f"{k}: " + "\n".join(problems)
         assert srows, k
+    assert sorted(r["key"] for r in records) == sorted(sum(plans, []))
+    for r in records:
+        assert [s["job_group"] for s in r["streams"]] == [r["groups"]["construct"]], r
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
