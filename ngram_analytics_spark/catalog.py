@@ -159,14 +159,16 @@ def _stored_schema(spark: SparkSession, path: str) -> T.StructType | None:
     return schema
 
 
-def scratch(name: str, sf_dir: str, *tables: str) -> str:
+def scratch(name: str, sf_dir: str | None = None, *tables: str) -> str:
     """The working directory ``name`` of this process for corpus
     ``sf_dir``: ``<tempdir>/nas-scratch-<pid>/<name>-<tag>``.
 
     ``tag`` hashes the absolute ``sf_dir`` and the file identity of
     each of ``tables``, so a copy derived from those tables is found
     again only while they are unchanged; rewriting one moves the path.
-    A per-run directory names no tables, and its caller clears it.
+    A per-run directory names no tables, and its caller clears it; one
+    that belongs to no corpus (a stream's checkpoint) passes no
+    ``sf_dir`` and a ``name`` unique to the call.
     Only the path is returned; nothing is created under the root.
 
     The root is this process's alone. Its first use creates it,
@@ -191,7 +193,7 @@ def scratch(name: str, sf_dir: str, *tables: str) -> str:
                 if pid != entry and pid.isdigit() and not _running(int(pid)):
                     shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
             _ROOTS.add(root)
-    key = [os.path.abspath(sf_dir)]
+    key = [] if sf_dir is None else [os.path.abspath(sf_dir)]
     for t in tables:
         _check(t)
         key.append(_identity(table_path(sf_dir, t)))

@@ -463,11 +463,13 @@ def minhash_candidate_pairs(sig: DataFrame) -> DataFrame:
     fact-skew fix)."""
     fp = [c for c in _MH_FP if c in sig.columns]
     member_struct = F.struct(F.col("doc_id"), *[F.col(c) for c in fp])
+    # ONE aggregate feeds both branches: its only function is the
+    # member list, so column pruning cannot give the intra and cross
+    # reads two different aggregate shapes (two signature exchanges).
+    # doc_id leads the struct and is unique, so the sort order is the
+    # sorted-id order and gid = min(doc_id) is the first member's id.
     grp = sig.groupBy(*_MH_SIG).agg(
-        F.min("doc_id").alias("gid"),
-        # doc_id leads the struct and is unique, so the sort order is
-        # exactly the old sorted-id order
-        F.sort_array(F.collect_list(member_struct)).alias("members"),
+        F.sort_array(F.collect_list(member_struct)).alias("members")
     )
 
     def _endpoint(side: Column, suffix: str, id_alias: str):
@@ -499,7 +501,9 @@ def minhash_candidate_pairs(sig: DataFrame) -> DataFrame:
     # and the (ga, gb) band count are the old ones; first() on the
     # carried member arrays is deterministic because every row of a
     # (ga, gb) group carries the same two arrays.
-    bands = _mh_band_rows(grp, "gid", "members")
+    bands = _mh_band_rows(
+        grp.withColumn("gid", F.col("members")[0]["doc_id"]), "gid", "members"
+    )
     # Band-cap cut BEFORE the members-carrying collect (r15, VERDICT
     # r14 item 2): a count window over the SAME (bj, bk) key — one
     # row per group per cell, so the count equals the old size(gs) —
@@ -586,15 +590,24 @@ def minhash_near_dup_pairs(d: DataFrame) -> DataFrame:
        CARRYING each endpoint's shingle-set fingerprint (_MH_FP),
        computed inside the signature aggregation at zero extra kernel
        cost (the digest-as-identity assumption every hash-keyed dedup
-       op here already makes, at ~2^-64 collision odds);
-    4. fingerprint-EQUAL pairs short-circuit to Jaccard = 1 with ZERO
-       joins (r10 fact-skew probe fix: a 2000-clone cluster emits
-       ~2M candidate pairs — the required output — but the old
-       recheck joined BOTH full shingle arrays onto every one of
-       them, 54.9x at equal rows vs uniform; clone pairs are
-       fingerprint-equal by construction); only fingerprint-UNEQUAL
-       pairs (banding-cap-bounded cross-group candidates plus rare
-       signature collisions) pay the doc-keyed exact intersect.
+       op here already makes, at ~2^-64 collision odds); the candidate
+       frame is read ONCE, with a fingerprint-equality flag;
+    4. the exact recheck is two doc-keyed LEFT joins of that one frame
+       to the shingle sets, each gated on the flag: fingerprint-EQUAL
+       pairs match no shingle row, so they never carry a shingle array
+       and short-circuit to Jaccard = 1 (r10 fact-skew probe fix: a
+       2000-clone cluster emits ~2M candidate pairs — the required
+       output — but the old recheck joined BOTH full shingle arrays
+       onto every one of them, 54.9x at equal rows vs uniform; clone
+       pairs are fingerprint-equal by construction); only
+       fingerprint-UNEQUAL pairs (banding-cap-bounded cross-group
+       candidates plus rare signature collisions) pay the exact
+       intersect. The signature side and the shingle side read ONE
+       document exchange: the NULL-doc_id filter is explicit on the
+       shared input, so the join's inferred filter adds nothing to one
+       side's scan that the other lacks. A document with a NULL
+       doc_id yields no pair, as in the oracle, whose recheck joins
+       every pair to its documents.
 
     No localCheckpoints anywhere: every frame is single-consumer or
     exchange-reused (eager checkpoints of the candidate table proved
@@ -608,32 +621,28 @@ def minhash_near_dup_pairs(d: DataFrame) -> DataFrame:
     sorted before the order-sensitive combinations lambda; the Jaccard
     ratio divides exact set sizes — identical doubles both engines,
     compared against the threshold pre-rounding, emitted at 4dp."""
-    cand = minhash_candidate_pairs(minhash_signatures(d))
-    eq = cand.filter(_mh_fp_equal()).select(
-        "id_a",
-        "id_b",
-        "n_bands",
-        F.col("n_sh_a").cast("int").alias("n_common"),
-        F.lit(1.0).alias("jaccard"),
+    d = d.filter(F.col("doc_id").isNotNull())
+    cand = minhash_candidate_pairs(minhash_signatures(d)).withColumn(
+        "_eq", _mh_fp_equal()
     )
-    sa = d.select(F.col("doc_id").alias("id_a"), F.col("st").alias("st_a"))
-    sb = d.select(F.col("doc_id").alias("id_b"), F.col("st").alias("st_b"))
+    sa = d.select(F.col("doc_id").alias("_da"), F.col("st").alias("st_a"))
+    sb = d.select(F.col("doc_id").alias("_db"), F.col("st").alias("st_b"))
+    eq = F.col("_eq")
     common, ratio = _mh_jaccard()
-    uneq = (
-        cand.filter(~_mh_fp_equal())
-        .select("id_a", "id_b", "n_bands")
-        .join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(ratio >= F.lit(_MH_MIN_J))
+    return (
+        cand.join(sa, (F.col("id_a") == F.col("_da")) & ~eq, "left")
+        .join(sb, (F.col("id_b") == F.col("_db")) & ~eq, "left")
+        .filter(eq | (ratio >= F.lit(_MH_MIN_J)))
         .select(
             "id_a",
             "id_b",
             "n_bands",
-            common.alias("n_common"),
-            round4det(ratio).alias("jaccard"),
+            F.when(eq, F.col("n_sh_a").cast("int"))
+            .otherwise(common)
+            .alias("n_common"),
+            F.when(eq, F.lit(1.0)).otherwise(round4det(ratio)).alias("jaccard"),
         )
     )
-    return eq.unionByName(uneq)
 
 
 def minhash_index_write(sig: DataFrame, path: str) -> None:

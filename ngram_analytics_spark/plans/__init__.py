@@ -66,6 +66,34 @@ def num_exchanges(df: DataFrame) -> int:
     )
 
 
+def distinct_exchanges(df: DataFrame) -> list[tuple[str, list[str]]]:
+    """The shuffles the plan runs, as planned: one (partitioning,
+    output column types) entry per distinct exchange. Copies of an
+    exchange whose subtrees have the same result are one entry: AQE
+    runs such a copy once and reuses its output, so a second entry is
+    a second shuffle of the data."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    found = []
+
+    def walk(node) -> None:
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec" and not any(
+            node.sameResult(seen) for seen in found
+        ):
+            found.append(node)
+        for i in range(node.children().size()):
+            walk(node.children().apply(i))
+
+    walk(plan)
+
+    def types(node) -> list[str]:
+        out = node.output()
+        return [out.apply(i).dataType().simpleString() for i in range(out.size())]
+
+    return [(n.outputPartitioning().toString(), types(n)) for n in found]
+
+
 def unpartitioned_window_count(df: DataFrame) -> int:
     """Count logical Window nodes with an EMPTY partition spec — each
     one moves the window's entire input to a single task at execution

@@ -27,6 +27,7 @@ from ngram_analytics_spark.functions.deterministic import (
 from ngram_analytics_spark.operators import spread
 from ngram_analytics_spark.operators.ngram import (
     ngram_col,
+    ngram_explode,
     ngrams_sql,
     skipgrams_sql,
 )
@@ -37,20 +38,31 @@ REG = QueryRegistry()
 TOKENS = "string_split(text, ' ')"  # DuckDB-side tokenizer
 
 
-def tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load(spark, sf_dir, "documents").withColumn(
-        "tokens", F.split(F.col("text"), " ")
-    )
+def tokenized_docs(
+    spark: SparkSession, sf_dir: str, *, spread_scan: bool = False
+) -> DataFrame:
+    """``documents`` plus ``tokens``, the whitespace split of ``text``.
+
+    ``spread_scan`` puts ``spread()`` between the scan and the
+    tokenizer, so its round-robin exchange carries the text rather
+    than the token arrays built from it (less than half the bytes on
+    the perfbench corpus) and the split runs on the spread tasks."""
+    docs = load(spark, sf_dir, "documents")
+    if spread_scan:
+        docs = spread(docs)
+    return docs.withColumn("tokens", F.split(F.col("text"), " "))
 
 
 def _exploded_ngrams(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    # scan -> project -> explode INDEX sequence -> concat after the
-    # explode. spread() is the single-split mitigation (r6): the
+    # scan -> spread -> split -> explode INDEX sequence -> concat after
+    # the explode. spread() is the single-split mitigation (r6): the
     # testdata file is one row group, and the explode pins the per-row
-    # work below any exchange — so spread + explode_outer (sf1: bigram
-    # 2.9 -> 1.6 s, topk 3.6 -> 1.7 s). On a many-split 100 TB input
-    # spread() is a no-op (input partitions >= cores) and the plan is
-    # shuffle-free exactly as before.
+    # work below any exchange (sf1: bigram 2.9 -> 1.6 s, topk 3.6 ->
+    # 1.7 s). It repartitions the scanned (doc_id, text) and the split
+    # runs after the exchange: the token arrays are more than twice
+    # the bytes of the text they come from. On a many-split 100 TB
+    # input spread() is a no-op (input partitions >= cores) and the
+    # plan is shuffle-free.
     #
     # r14 (guide §1.2 per-task work): exploding the gram STRINGS built
     # by the interpreted transform lambda (ngram_col) spent the stage
@@ -60,11 +72,10 @@ def _exploded_ngrams(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     # Identical rows; measured 3.0x on the sf0.1x10 bigram-count
     # kernel. The array-valued ngram_col keeps its own (also sped-up)
     # spelling for array consumers.
-    from ngram_analytics_spark.operators import spread
-    from ngram_analytics_spark.operators.ngram import ngram_explode
-
     return ngram_explode(
-        spread(tokenized_docs(spark, sf_dir)).select("doc_id", "tokens"),
+        tokenized_docs(spark, sf_dir, spread_scan=True).select(
+            "doc_id", "tokens"
+        ),
         "tokens",
         n,
     )
@@ -549,8 +560,6 @@ def q_text_collocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables, broadcast-crossJoined in, mirroring the oracle's `totals`
     CTE) — no driver-side .count() action at plan-build time, so the
     whole query is one Spark job and the totals can never go stale."""
-    from ngram_analytics_spark.operators.ngram import ngram_explode
-
     toks = tokenized_docs(spark, sf_dir)
     uni = toks.select(F.explode("tokens").alias("w"))
     bi = ngram_explode(
@@ -1808,9 +1817,7 @@ def q_filter_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     the q_dedup_jaccard discipline), per-row scan-stage gate
     expressions, ONE map-side-combined groupBy to <= |sources| x 8
     rows."""
-    from ngram_analytics_spark.operators import spread
-
-    df = spread(tokenized_docs(spark, sf_dir))
+    df = tokenized_docs(spark, sf_dir, spread_scan=True)
     n_tok = F.size("tokens")
     uniq_ratio = F.size(F.array_distinct("tokens")).cast("double") / n_tok
     sw = F.array(*[F.lit(s) for s in _STOPWORDS])

@@ -153,26 +153,37 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFr
 
     The sink gets a fresh name per run and its temp view is dropped
     before returning: the returned frame keeps the rows, and two
-    callers running the same stream on one session cannot collide."""
+    callers running the same stream on one session cannot collide.
+    The run checkpoints into a ``catalog.scratch`` directory of its
+    own, removed when the run ends, also when the stream raises
+    (without a location Spark makes one under ``java.io.tmpdir`` and
+    keeps it after a failure)."""
+    import shutil
     import time
     import uuid
 
     sess = stream_df.sparkSession
     name = f"nas_sink_{uuid.uuid4().hex}"
+    ckpt = catalog.scratch(name)
     t0 = time.perf_counter()
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = None
     try:
+        q = (
+            stream_df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination()
         wall = time.perf_counter() - t0
         rows = sess.table(name)
     finally:
+        if q is not None:
+            q.stop()
         sess.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
     process = 0.0
     n_batches = 0
     try:
@@ -208,6 +219,13 @@ def stream_stream_join(
     window. Both sides are watermarked and the join condition bounds
     the event-time gap — the two requirements that let Spark GC join
     state on an unbounded stream (without them state grows forever).
+
+    Each run logs ``Cannot evaluate expression: l_id`` from
+    ``StreamingJoinHelper``. That is expected: Spark derives the
+    eviction bound from each conjunct of the condition on its own, the
+    ``l_id < r_id`` conjunct yields none, and the two time conjuncts
+    still bound the state (``tests/test_streaming.py`` pins that rows
+    are evicted).
     """
     l = (
         left.withWatermark("ts", watermark)

@@ -7,6 +7,10 @@ push down) only shows up here — as a 100x slowdown at 100 TB.
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from ngram_analytics_spark import plans as P
 from tests.conftest import SF_SMOKE
 
@@ -57,6 +61,34 @@ def test_ngram_transform_no_shuffle(spark):
     single-split spread() mitigation (see above)."""
     df = _q("q_ngram_bigram")(spark, SF_SMOKE)
     assert P.num_exchanges(df) <= 1, P.physical_plan(df)
+
+
+def _shuffles(df) -> list[tuple[str, list[str]]]:
+    """The plan's distinct exchanges, expression ids masked."""
+    return [(re.sub(r"#\d+L?", "", p), t) for p, t in P.distinct_exchanges(df)]
+
+
+def test_minhash_kernel_shuffles_each_input_once(smoke_df):
+    """The certified MinHash kernel shuffles the documents once and its
+    signature table once: the signature side and the recheck's shingle
+    side share one round-robin exchange, and the intra- and
+    cross-group branches share one signature-keyed aggregate."""
+    parts = [p for p, _ in _shuffles(smoke_df("q_dedup_minhash_exact"))]
+    sig = "hashpartitioning(" + ", ".join(f"m{i}" for i in range(8)) + ","
+    assert sum(p.startswith("RoundRobinPartitioning") for p in parts) == 1, parts
+    assert sum(p.startswith(sig) for p in parts) == 1, parts
+
+
+@pytest.mark.parametrize(
+    "key", ["q_ngram_topk", "q_ngram_bigram", "q_ngram_trigram", "q_filter_reasons"]
+)
+def test_spread_carries_text_not_tokens(smoke_df, key):
+    """spread() repartitions the scanned text; the tokenizer runs after
+    the exchange, so no token array crosses it."""
+    spread = [t for p, t in _shuffles(smoke_df(key)) if p.startswith("RoundRobin")]
+    assert spread, key
+    for types in spread:
+        assert not any(t.startswith("array") for t in types), (key, types)
 
 
 def test_range_binned_join_avoids_nested_loop(spark):
@@ -228,7 +260,6 @@ def test_dedup_incremental_classification(spark):
 
 def test_theta_join_banded_op_le_and_validation(spark):
     """<= keeps equal-value pairs; unsupported ops raise."""
-    import pytest
     from ngram_analytics_spark.operators.rangejoin import banded_theta_join
 
     a = spark.createDataFrame([(1, 5.0), (2, 7.0)], "ida long, v double")

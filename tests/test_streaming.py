@@ -86,6 +86,54 @@ def test_stream_stream_join_batch_parity(spark):
     assert len(got) > 0
 
 
+def test_stream_stream_join_evicts_state(spark, tmp_path):
+    """stream_stream_join's state is evicted: three files of 400
+    events, each file an hour later than the one before, read one file
+    per micro-batch. Spark removes join state rows as the watermark
+    passes them, and the state left at the end is smaller than the
+    rows fed to both sides."""
+    import datetime as dt
+
+    schema = "event_id long, ts timestamp, user_id long"
+    src = str(tmp_path / "events_hourly")
+    t0 = dt.datetime(2024, 1, 1)
+    for f in range(3):
+        ids = range(400 * f, 400 * (f + 1))
+        rows = [
+            (e, t0 + dt.timedelta(hours=f, seconds=9 * (e % 400)), e % 20)
+            for e in ids
+        ]
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def side():
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    q = (
+        S.stream_stream_join(side(), side())
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("join_eviction_pin")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+        spark.catalog.dropTempView("join_eviction_pin")
+    state = [p["stateOperators"][0] for p in q.recentProgress if p["stateOperators"]]
+    assert len(state) >= 3, state
+    assert sum(s["numRowsRemoved"] for s in state) > 0, state
+    assert state[-1]["numRowsTotal"] < 2 * 1200, state
+
+
 def test_session_window_batch_stream_parity(spark):
     stream = S.session_counts(S.read_events_stream(spark, SF_SMOKE))
     out = S.run_to_memory(stream, output_mode="complete")
@@ -263,6 +311,38 @@ def test_run_to_memory_records_timing_split(spark):
     assert r["process_s"] > 0
     assert r["startup_s"] >= 0
     assert abs((r["startup_s"] + r["process_s"]) - r["wall_s"]) < 0.002
+
+
+@pytest.mark.parametrize("fails", [False, True], ids=["live_key", "raising"])
+def test_run_to_memory_leaves_no_checkpoint(spark, registry, fails):
+    """Every run checkpoints into a scratch directory of its own and
+    removes it: a run leaves no ``temporary-*`` checkpoint of Spark's
+    under ``java.io.tmpdir`` and nothing under the scratch root, also
+    when its stream raises."""
+    import os
+
+    from ngram_analytics_spark import catalog
+
+    jtmp = spark._jvm.java.lang.System.getProperty("java.io.tmpdir")
+    root = os.path.dirname(catalog.scratch("probe", SF_SMOKE))
+
+    def left():
+        temporary = {e for e in os.listdir(jtmp) if e.startswith("temporary-")}
+        ours = {e for e in os.listdir(root) if e.startswith("nas_sink_")}
+        return temporary, ours
+
+    before = left()
+    if fails:
+        stream = S.read_events_stream(spark, SF_SMOKE).select(
+            F.assert_true(F.col("event_id") < 0).alias("never")
+        )
+        with pytest.raises(Exception, match="event_id"):
+            S.run_to_memory(stream, output_mode="append")
+    else:
+        assert registry.queries["q_stream_live_tumbling"](spark, SF_SMOKE).count()
+    temporary, ours = left()
+    assert temporary <= before[0], temporary - before[0]
+    assert not ours, ours
 
 
 @pytest.mark.parametrize("stage", ["warm", "cold"])
