@@ -17,9 +17,22 @@ The reference rebuilds its SQL context on every call
   plus the ``nanosAsLong`` setting, which changes the inferred ``ts``
   type. Rewriting or appending a table (``sources.write`` on a
   directory table renames files into it, so its mtime moves) makes the
-  next load infer again. Only the schema is cached, never the
-  DataFrame: every load returns a fresh relation with fresh attribute
-  ids, so self-joins of two loads still resolve.
+  next load infer again. No DataFrame is cached: every load returns a
+  fresh relation with fresh attribute ids, so self-joins of two loads
+  still resolve.
+- The layout is decided once per file identity too. ``load(...,
+  spread=True)`` is for callers whose per-row work dwarfs the scan. A
+  table whose parquet footers hold fewer row groups than the session's
+  ``defaultParallelism`` scans as that few tasks, and every per-row
+  kernel above it runs on them. Its first spread load in a process
+  writes one copy of it, ``defaultParallelism`` files, under
+  :func:`scratch`; every later spread load scans that copy, one split
+  per file, with no exchange in its plan. The copy is one job that
+  reads, shuffles and writes the table once (measured in CHANGES.md),
+  paid by the first spread load of each table version in a process.
+  A table with enough row groups is served as the plain scan, and one
+  without a local identity (a non-local URI) by a ``repartition`` of
+  it.
 - :func:`_pin` sets each session's confs once, on its first load
   (``session.get_spark`` builds sessions with :data:`SESSION_CONF`
   already; a session built elsewhere gets them here):
@@ -45,7 +58,9 @@ The reference rebuilds its SQL context on every call
   removed when the interpreter exits, or by the next process's first
   use if this one dies first. A derived copy is keyed by the file
   identity of the tables it copies, so it is reused only while they
-  are unchanged.
+  are unchanged, and :func:`publish` renames it into place whole, so
+  two threads that make it at once cannot read or delete each other's
+  files.
 """
 
 from __future__ import annotations
@@ -91,6 +106,9 @@ _PIN_LOCK = threading.Lock()
 #: path -> (file identity, stored schema); one entry per path, so a
 #: rewritten file replaces its stale entry.
 _SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+#: path -> (file identity and width, the cores-wide copy or None when
+#: the table scans that wide already, the schema the copy is read with)
+_LAYOUTS: dict[str, tuple[tuple, str | None, T.StructType]] = {}
 _SCRATCH_PREFIX = "nas-scratch-"
 #: scratch roots set up by :func:`scratch`; one per process, but a
 #: forked child or a changed temp dir makes a new one
@@ -236,14 +254,99 @@ def _check(name: str) -> None:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one synthetic table as a DataFrame (lazy parquet scan)."""
+def load(
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
+) -> DataFrame:
+    """Load one synthetic table as a DataFrame (lazy parquet scan).
+
+    ``spread=True`` scans it as at least ``defaultParallelism`` splits
+    (see the module docstring): a small or single-row-group file
+    otherwise scans as one task, which serializes every per-row kernel
+    above it onto one core. Only worth it where the per-row work
+    dwarfs the scan; cheap scans should stay on the plain load."""
     _check(name)
     _pin(spark)
     path = table_path(sf_dir, name)
+    if spread:
+        return _spread_load(spark, sf_dir, name, path)
     schema = _stored_schema(spark, path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return _normalize(reader.parquet(path), name)
+
+
+def _row_groups(path: str) -> tuple[int, int]:
+    """(row groups, rows) of the parquet data files at ``path``, from
+    their footers."""
+    import pyarrow.parquet as pq
+
+    files = [path]
+    if os.path.isdir(path):
+        files = []
+        for d, dirs, names in os.walk(path):
+            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+            files += [
+                os.path.join(d, f) for f in names if not f.startswith(("_", "."))
+            ]
+    metas = [pq.read_metadata(f) for f in files]
+    return sum(m.num_row_groups for m in metas), sum(m.num_rows for m in metas)
+
+
+def _spread_load(
+    spark: SparkSession, sf_dir: str, name: str, path: str
+) -> DataFrame:
+    """Table ``name`` as a scan of at least ``defaultParallelism``
+    splits: the plain scan when it has that many row groups, else its
+    cores-wide copy, made on the first call per file identity."""
+    width = spark.sparkContext.defaultParallelism
+    ident = _identity(path)
+    if ident is None:
+        return load(spark, sf_dir, name).repartition(width)
+    key = ident + (width,)
+    hit = _LAYOUTS.get(path)
+    if hit is None or hit[0] != key:
+        df = load(spark, sf_dir, name)
+        groups, rows = _row_groups(path)
+        copy = None
+        if rows and groups < width:
+            # round-robin fills the files alike, and Spark packs files
+            # into a split up to their mean size plus the open cost,
+            # so each file scans as one split
+            copy = publish(
+                scratch(f"spread{width}-{name}", sf_dir, name),
+                df.repartition(width).write.parquet,
+            )
+        hit = _LAYOUTS[path] = (key, copy, df.schema)
+    _, copy, schema = hit
+    if copy is None:
+        return load(spark, sf_dir, name)
+    # the copy holds the normalized columns, so it needs no _normalize
+    return spark.read.schema(schema).parquet(copy)
+
+
+def publish(path: str, write) -> str:
+    """Make the derived copy at ``path`` once, and return ``path``.
+
+    ``write(tmp)`` fills a fresh sibling directory, which is then
+    renamed to ``path`` in one step: a reader finds the whole copy or
+    none. Two callers that both find it missing both write; the one
+    whose rename loses removes its own directory and uses the winner's,
+    so neither deletes files under the other's running scan."""
+    import shutil
+    import uuid
+
+    if os.path.isdir(path):
+        return path
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    try:
+        write(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:  # another caller published first
+            if not os.path.isdir(path):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return path
 
 
 def read_stream(

@@ -6,19 +6,17 @@ from pyspark.sql import functions as F
 from ngram_analytics_spark.operators.ngram import ngram, ngram_col, ngrams_sql
 
 
-def spread(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Repartition up to ``factor * defaultParallelism`` if the input
-    has fewer partitions.
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition a derived frame round-robin to ``defaultParallelism``
+    if it has fewer partitions.
 
-    Small or single-row-group files scan as ONE task, which serializes
-    every downstream per-row kernel onto one core — a local-mode symptom
-    of the same problem a 1000-executor cluster has with a handful of
-    giant unsplittable inputs. One narrow round-robin shuffle of the
-    (small) input buys full-width parallelism for the expensive
-    compute that follows. Only worth it when the per-row work dwarfs
-    the exchange cost; cheap scans should stay shuffle-free.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    A scanned table is spread by the catalog instead:
+    ``catalog.load(..., spread=True)`` lays it out cores-wide once per
+    file identity, so its queries run no exchange for it. This is for
+    inputs that are not scans, where the exchange itself is wanted
+    (``q_attribution_decay``'s join sides, whose reasons are at the
+    call). The partition count is probed by planning the input."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

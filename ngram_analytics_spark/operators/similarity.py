@@ -12,10 +12,10 @@ Scale paths:
 
 Hot-path discipline: the float->double cast and the norm are computed
 ONCE per input row (below the join, O(rows)), never per pair; the
-stream side of the pair join is repartitioned so the O(n^2) scoring
-spreads across all cores instead of one nested-loop task; the per-pair
-dot product is the sequential fold that matches the DuckDB oracle's
-list_sum bit-for-bit.
+callers pass a spread load (``catalog.load(..., spread=True)``) as the
+corpus, so the O(n^2) scoring runs on the stream side's cores-wide scan
+tasks instead of one nested-loop task; the per-pair dot product is the
+sequential fold that matches the DuckDB oracle's list_sum bit-for-bit.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ngram_analytics_spark.functions.deterministic import round4det
-from ngram_analytics_spark.operators import combo_pairs, spread
+from ngram_analytics_spark.operators import combo_pairs
 from ngram_analytics_spark.functions.vectors import (
     cosine_from_parts,
     dot,
@@ -59,10 +59,11 @@ def brute_force_knn(
     The query side is broadcast — at 100 TB the corpus never shuffles;
     each executor scores its local corpus partitions against the
     (small) query set, and only k rows per (partition, query) survive
-    the window's group-limit pushdown.
+    the window's group-limit pushdown. Pass a spread load as
+    ``corpus`` (see the module docstring).
     """
     q = _side(queries, id_col, vec_col, "query_id", "_qv", "_qn")
-    c = spread(_side(corpus, id_col, vec_col, "neighbor_id", "_cv", "_cn"), factor=2)
+    c = _side(corpus, id_col, vec_col, "neighbor_id", "_cv", "_cn")
     scored = c.join(
         F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
     ).withColumn(
@@ -136,20 +137,16 @@ def ivf_knn(
             .drop("_centv", "_csim", "_crn")
         )
 
-    # spread the corpus-side assignment (r15): the n_cells-way cosine
-    # scoring runs map-side below the rank window's exchange, so a
-    # single-split scan otherwise carries ALL of it on one task
-    # (stage record of telemetry.run_query: 1.78 s of
-    # q_sim_ann_ivf_exact's 4.75 s wall at
-    # sf0.1) — the same guard brute_force_knn has carried since r10;
-    # no-op on many-split inputs, values rank-deterministic.
+    # the corpus-side assignment needs a spread corpus (r15): the
+    # n_cells-way cosine scoring runs map-side below the rank window's
+    # exchange, so a single-split scan otherwise carries ALL of it on
+    # one task (stage record of telemetry.run_query: 1.78 s of
+    # q_sim_ann_ivf_exact's 4.75 s wall at sf0.1) — the same guard
+    # brute_force_knn has carried since r10; values rank-deterministic.
     assigned = nearest_cells(
-        spread(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).cast("array<double>").alias("_cv"),
-            ),
-            factor=2,
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).cast("array<double>").alias("_cv"),
         ),
         "neighbor_id",
         "_cv",
@@ -202,7 +199,7 @@ def similarity_pairs(
     across the fold kernel, the BLAS kernel and the SQL oracle even
     when their summation orders differ in the last ulp.
     """
-    a = spread(_side(corpus, id_col, vec_col, "id_a", "_va", "_na"), factor=2)
+    a = _side(corpus, id_col, vec_col, "id_a", "_va", "_na")
     b = _side(corpus, id_col, vec_col, "id_b", "_vb", "_nb")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))

@@ -30,7 +30,6 @@ from ngram_analytics_spark.functions.deterministic import (
     oracle_round4det,
     round4det,
 )
-from ngram_analytics_spark.operators import spread
 from ngram_analytics_spark.operators.ngram import ngram_col, ngrams_sql
 from ngram_analytics_spark.registry import QueryRegistry
 
@@ -88,10 +87,11 @@ def q_doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     averaged directly (no log) so the score stays bit-identical across
     engines — no libm transcendental in the differential surface.
     """
-    # documents scan is a single row group -> one task; spread() buys
-    # plan-wide parallelism for the per-row n-gram kernels (measured
-    # 3.4x on the explode at sf0.1 — the q_dedup_jaccard discipline).
-    t = spread(load(spark, sf_dir, "documents")).select(
+    # documents scan is a single row group -> one task; the spread
+    # load buys plan-wide parallelism for the per-row n-gram kernels
+    # (measured 3.4x on the explode at sf0.1 — the q_dedup_jaccard
+    # discipline).
+    t = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     # ngram_explode (r14): index-explode + post-explode gram assembly
@@ -150,7 +150,7 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     each document reports what fraction of its spans are boilerplate —
     the removal signal upstream of dedup in a training-data pipeline.
 
-    Plan: spread() the single-row-group scan so the span construction
+    Plan: spread-load the single-row-group scan so the span construction
     runs plan-wide, then per-(doc, span) counts (one map-side-combined
     shuffle; makes the doc-frequency a PLAIN count, no countDistinct
     expand, and shrinks the join-back side to per-doc-distinct spans)
@@ -169,7 +169,7 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ngram_analytics_spark.operators.ngram import ngram_explode
 
     g = ngram_explode(
-        spread(load(spark, sf_dir, "documents")).select(
+        load(spark, sf_dir, "documents", spread=True).select(
             "doc_id", F.split("text", " ").alias("toks")
         ),
         "toks",
@@ -349,7 +349,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     key; postings are sorted in-plan (collect_set + array_sort) so the
     head is deterministic on any partitioning, and emitted as a
     flattened string per the scalar-only output discipline."""
-    t = spread(load(spark, sf_dir, "documents")).select(
+    t = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
     )
     return t.groupBy("term").agg(
@@ -847,7 +847,7 @@ def q_ngram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram string."""
     from ngram_analytics_spark.operators.ngram import ngram_explode
 
-    t = spread(load(spark, sf_dir, "documents")).select(
+    t = load(spark, sf_dir, "documents", spread=True).select(
         F.split("text", " ").alias("toks")
     )
     bg = ngram_explode(t, "toks", 2, out_col="bg", keep=[])
@@ -930,7 +930,7 @@ def q_text_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_bpe_pair_counts distinct-vocabulary discipline; no joins, no
     windows."""
     t = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select(
             "lang", F.explode_outer(F.split("text", " ")).alias("tok")
         )
@@ -1019,7 +1019,7 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: integer counts and one floor-div ppm per grid
     point."""
     d = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select(
             "doc_id", F.explode_outer(F.split("text", " ")).alias("tok")
         )
@@ -1128,7 +1128,7 @@ def q_text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NULL contract: D counts only docs WITH text — a NULL doc has no
     terms and is not a zero-occurrence observation (both engines)."""
-    d = load(spark, sf_dir, "documents").filter(
+    d = load(spark, sf_dir, "documents", spread=True).filter(
         F.col("text").isNotNull()
     )
     dd = d.agg(F.count("*").cast("long").alias("d"))
@@ -1149,8 +1149,7 @@ def q_text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
     tc = (
-        spread(d)
-        .select(F.array_sort(F.split("text", " ")).alias("srt"))
+        d.select(F.array_sort(F.split("text", " ")).alias("srt"))
         .select(
             "srt",
             F.expr(
@@ -1257,7 +1256,7 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-unpartitioned-windows invariant intact) -> 1-row moment
     aggregate."""
     t = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select(F.explode_outer(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok").isNotNull() & (F.col("tok") != ""))
         .groupBy("tok")
@@ -1371,7 +1370,7 @@ def q_text_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup scales with corpus size — only with vocabulary."""
     from ngram_analytics_spark.operators.ngram import ngram_explode
 
-    t = spread(load(spark, sf_dir, "documents")).select(
+    t = load(spark, sf_dir, "documents", spread=True).select(
         "lang", F.split("text", " ").alias("toks")
     )
     bg = ngram_explode(t, "toks", 2, out_col="bg", keep=["lang"])

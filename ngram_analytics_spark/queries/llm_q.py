@@ -74,8 +74,10 @@ _COS_AB = oracle_cosine("a.embedding", "b.embedding")
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized text hash (keep lowest doc_id).
 
-    No spread() here: measured A/B, per-row sha256 is cheaper than the
-    extra exchange (0.37s plain vs 0.55s spread at sf0.1 warm)."""
+    The plain scan, not the spread load: per-row sha256 is cheap next
+    to the scan (0.37s plain vs 0.55s behind a round-robin exchange
+    at sf0.1 warm), and reading the cores-wide copy bought no time in
+    the corpus pass while its peak RSS rose."""
     return exact_dedup(load(spark, sf_dir, "documents"), "doc_id", "text")
 
 
@@ -112,16 +114,14 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation buffer costs what the second scan branch costs — so
     the simpler certified form stays.
     """
-    from ngram_analytics_spark.operators import spread
-
-    # documents scans as one task (single row group); spread it so the
-    # per-row shingle construction runs plan-wide, not on one core.
+    # documents scans as one task (single row group); spread-load it
+    # so the per-row shingle construction runs plan-wide, not on one core.
     # tokenizer hoisted to its own projection (longdoc probe r9:
     # 18x at equal token mass with split() inside the slice lambda)
     # NULL contract (tools/null_probe.py): NULL text = no shingles —
     # filtered on BOTH engines before pairing.
     d = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .filter(F.col("text").isNotNull())
         .select("doc_id", F.split("text", " ").alias("toks"))
         .withColumn("st", F.array_distinct(ngram_col("toks", 2)))
@@ -175,15 +175,13 @@ def q_dedup_fuzzy_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set depends on the rare-shingle cutoff — oracled in tests
     against the brute-force kernel instead of SQL.
 
-    spread() before the kernel (r15): the single-row-group corpus file
-    scans as ONE task, and the stage record of telemetry.run_query
+    Spread load before the kernel (r15): the single-row-group corpus
+    file scans as ONE task, and the stage record of telemetry.run_query
     shows that one task carrying the whole shingle+postings build
-    (5.5 s of the 6.9 s wall at sf0.1);
-    the pair set is order-free (in-array a<b expansion + distinct), so
-    the round-robin exchange changes no value."""
-    from ngram_analytics_spark.operators import spread
-
-    docs = spread(load(spark, sf_dir, "documents")).withColumn(
+    (5.5 s of the 6.9 s wall at sf0.1); the pair set is order-free
+    (in-array a<b expansion + distinct), so the layout changes no
+    value."""
+    docs = load(spark, sf_dir, "documents", spread=True).withColumn(
         "tokens", F.split("text", " ")
     )
     return ngram_jaccard_pairs(
@@ -231,7 +229,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sim_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 per query vector (queries = vec_id<10)."""
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings", spread=True)
     return brute_force_knn(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
@@ -260,7 +258,7 @@ def q_sim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REG.register("q_sim_ann_ivf")  # rows-only: recall vs brute force asserted in tests
 def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-5 (deterministic coarse centroids, 3 probes)."""
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings", spread=True)
     return ivf_knn(
         emb, emb.filter(F.col("vec_id") < 10), k=5, n_cells=20, n_probe=3
     ).orderBy("query_id", "rn")
@@ -381,11 +379,9 @@ def q_sim_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one remaining rows-only similarity branch joins the certified
     md5-twin program (MinHash / SimHash / Bloom / count-min / IVF).
 
-    spread() first: the single-row-group embeddings scan would
+    Spread load: the single-row-group embeddings scan would
     otherwise run the 48 projection chains on ONE task."""
-    from ngram_analytics_spark.operators import spread
-
-    emb = spread(load(spark, sf_dir, "embeddings"))
+    emb = load(spark, sf_dir, "embeddings", spread=True)
     return cosine_edges(
         emb, min_cos=_RPL_MIN_COS, method="lsh"
     ).orderBy("id_a", "id_b")
@@ -465,7 +461,7 @@ def q_sim_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: cosine folds are left-associated double chains
     (identical both engines); every rank tie breaks on an id."""
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings", spread=True)
     return ivf_knn(
         emb,
         emb.filter(F.col("vec_id") < 10),
@@ -1594,21 +1590,20 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: shingle sets are distinct arrays, counts are
     integers, and the ratio is floor-ppm — no float surface."""
-    from ngram_analytics_spark.operators import spread
-
-    # documents scans as one row group -> one task; spread() runs the
-    # per-row shingle kernel plan-wide (the q_dedup_jaccard discipline).
+    # documents scans as one row group -> one task; the spread load
+    # runs the per-row shingle kernel plan-wide (the q_dedup_jaccard
+    # discipline).
     # NO pre-explode size filter and explode_outer, NOT explode (r6):
     # both an explicit size(st) filter and explode's inferred one push
-    # BELOW the spread() exchange, evaluating the whole shingle lambda
-    # on the single scan task (4.1 -> 0.7 s postings stage at sf0.1).
+    # down to the scan and evaluate the whole shingle lambda there
+    # (4.1 -> 0.7 s postings stage at sf0.1, on a one-task scan).
     # Min-shingle eligibility moves to a doc-keyed count + semi-join;
     # the recheck sets need no filter at all — candidate ids are
     # already eligible by construction.
     # tokenizer hoisted to its own projection (longdoc probe r9:
     # 22.2x at equal token mass with split() inside the slice lambda)
     d_arrays = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select("doc_id", F.split("text", " ").alias("toks"))
         .select(
             "doc_id",
@@ -1952,11 +1947,9 @@ def q_dedup_minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     and exact trigram Jaccard. The plan (signature collapse, capped
     banding, fingerprint short-circuit, exact recheck) is the kernel's:
     operators/dedup.minhash_near_dup_pairs."""
-    from ngram_analytics_spark.operators import spread
-
     # tokenizer hoisted to its own projection (longdoc probe r9)
     d = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select("doc_id", F.split("text", " ").alias("toks"))
         .withColumn("st", minhash_shingles("toks"))
     )
@@ -2195,10 +2188,8 @@ def q_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recursion-free BATCH TWIN over the union'd corpus (the
     q_dedup_incremental spelling): index persistence cannot change
     the candidate set, which is exactly what the hash gate proves."""
-    from ngram_analytics_spark.operators import spread
-
     d = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select("doc_id", "lang", F.split("text", " ").alias("toks"))
         .withColumn("st", minhash_shingles("toks"))
     )
@@ -2479,7 +2470,7 @@ def q_ml_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: brute_force_knn broadcasts the {nq}-row query side against
     the corpus scan (never corpus x corpus); label joins key on
     vec_id; the final aggregate is one row."""
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings", spread=True)
     top = brute_force_knn(
         emb, emb.filter(F.col("vec_id") < _MRR_NQ), k=_MRR_K
     )
@@ -2662,7 +2653,7 @@ def q_ml_precision_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus scan; the relevant-mass side is ONE label-keyed count
     joined to the {nq}-row query labels (never corpus x corpus);
     final agg groups {nq} rows."""
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings", spread=True)
     top = brute_force_knn(
         emb, emb.filter(F.col("vec_id") < _PK_NQ), k=_PK_K
     )
@@ -3627,7 +3618,7 @@ def q_ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus scan; the relevant-count side is ONE label-keyed
     aggregate broadcast back onto the queries; final aggregate is one
     row (q_ml_mrr class)."""
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings", spread=True)
     top = brute_force_knn(
         emb, emb.filter(F.col("vec_id") < _NDCG_NQ), k=_NDCG_K
     )
@@ -3857,18 +3848,16 @@ def q_embed_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out at sz ~ 3e9) — the accumulator rides DECIMAL(38,0)/HUGEINT
     (r12 lint-widening audit).
 
-    Plan: per-row projection HOF (zero shuffles beyond the spread),
-    one explode to the 24 (table, band-key) rows per vector, ONE
-    map-side-combined groupBy on (table, key), then a 24-group
-    rollup. At 100 TB the occupancy table is bounded by the bucket
-    domain. spread() parallelizes the interpreted projection kernel
-    on few-split inputs (r10 adjudication: the single-row-group bench
-    file ran all 48 projections on ONE task at 4% cpu; no-op on
-    many-split inputs)."""
-    from ngram_analytics_spark.operators import spread
+    Plan: per-row projection HOF (zero shuffles), one explode to the
+    24 (table, band-key) rows per vector, ONE map-side-combined
+    groupBy on (table, key), then a 24-group rollup. At 100 TB the
+    occupancy table is bounded by the bucket domain. The spread load
+    parallelizes the interpreted projection kernel on few-split
+    inputs (r10 adjudication: the single-row-group bench file ran
+    all 48 projections on ONE task at 4% cpu)."""
     from ngram_analytics_spark.operators.similarity import rp_signatures
 
-    sig = rp_signatures(spread(load(spark, sf_dir, "embeddings")))
+    sig = rp_signatures(load(spark, sf_dir, "embeddings", spread=True))
     bands = sig.select(
         F.expr(
             f"explode(transform(sequence(0, {_RPL_TABLES - 1}),"
@@ -3981,9 +3970,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: md5 window digests, integer token masses, integer
     keep flag."""
-    from ngram_analytics_spark.operators import spread
-
-    d = spread(load(spark, sf_dir, "documents")).select(
+    d = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     base = d.select(
@@ -4359,7 +4346,10 @@ def q_ml_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm,
     )
 
-    emb = load(spark, sf_dir, "embeddings")
+    # spread load: the corpus side carries the scoring work, and the
+    # bench file is a single row group — without it the whole BNLJ
+    # scores on ONE task (r10 adjudication: 4% cpu)
+    emb = load(spark, sf_dir, "embeddings", spread=True)
     q = emb.filter(F.col("vec_id") < _HN_NQ).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("_qv"),
@@ -4368,12 +4358,7 @@ def q_ml_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = q.select(
         "query_id", "_qv", "_ql", l2_norm(F.col("_qv")).alias("_qn")
     )
-    # spread: the corpus side carries the scoring work, and the bench
-    # file is a single row group — without it the whole BNLJ scores on
-    # ONE task (r10 adjudication: 4% cpu; no-op on many-split inputs)
-    from ngram_analytics_spark.operators import spread
-
-    c = spread(emb).select(
+    c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").cast("array<double>").alias("_cv"),
         F.col("label").cast("long").alias("neg_label"),
@@ -4499,7 +4484,7 @@ def q_ml_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: both kernels broadcast the 10-row query side; the recall
     join keys on (query_id, neighbor_id) over <= {k} rows per query.
     At 100 TB only the two linear corpus scans scale."""
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings", spread=True)
     q10 = emb.filter(F.col("vec_id") < 10)
     approx = ivf_knn(
         emb,
@@ -4738,11 +4723,10 @@ def q_dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: exact distinct counts, floor-div ppm, (shared, s1,
     s2) tie-broken top-{k}."""
-    from ngram_analytics_spark.operators import spread
     from ngram_analytics_spark.operators.ngram import ngram_col
 
     d = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .filter(F.col("text").isNotNull())
         .select("source", F.split("text", " ").alias("toks"))
         .withColumn("st", F.array_distinct(ngram_col("toks", _XS_N)))
@@ -5381,7 +5365,7 @@ def q_ml_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus scan; the cumulative-hit window partitions are k rows
     each; the relevant-mass side is ONE label-keyed count (never
     corpus x corpus); final agg groups {nq} rows."""
-    emb = load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings", spread=True)
     top = brute_force_knn(
         emb, emb.filter(F.col("vec_id") < _MAP_NQ), k=_MAP_K
     )
@@ -6134,29 +6118,25 @@ def q_dedup_semantic(
     import math
 
     from ngram_analytics_spark.functions.vectors import dot, l2_norm
-    from ngram_analytics_spark.operators import spread
 
     # norms hoist to ONE fold per vector/centroid BELOW every join
     # (the operators/similarity.py discipline) so each of the n*K
     # assignment rows and each candidate pair pays a single dot fold,
     # not three — bit-exactness is unaffected because a vector's norm
     # is the same expression on the same input wherever it evaluates.
-    # spread(): the n*K assignment folds otherwise run on the scan's
-    # few row-group splits (measured 2 of 32 cores at derived-sf1 —
-    # the q_embed_bucket_stats single-file lesson).
+    # spread load: the n*K assignment folds otherwise run on the
+    # scan's few row-group splits (measured 2 of 32 cores at
+    # derived-sf1 — the q_embed_bucket_stats single-file lesson).
     # ONE plan-statistic job: n sizes K (IEEE ceil(sqrt(double)) —
     # the exact spelling the oracle uses, so K cannot desync) and
     # the approx distinct-embedding count drives the collapse toggle.
-    # Runs on the UN-spread scan (count/distinct are partitioning-
-    # invariant; skipping the repartition shuffle saves a stage) and
-    # HLLs a per-row xxhash64 instead of the raw 64-float array.
-    emb_base = load(spark, sf_dir, "embeddings").select(
+    # It HLLs a per-row xxhash64 instead of the raw 64-float array.
+    emb = load(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id",
         "embedding",
         l2_norm(F.col("embedding")).alias("nrm"),
     ).filter(F.col("nrm") > 0)
-    emb = spread(emb_base)
-    stats = emb_base.agg(
+    stats = emb.agg(
         F.count(F.lit(1)).alias("n"),
         F.approx_count_distinct(F.xxhash64("embedding"), 0.02).alias("nd"),
     ).first()

@@ -80,16 +80,17 @@ def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles. Zero-hit docs are restored by a left join against the
     (already loaded) documents scan.
     """
-    from ngram_analytics_spark.operators import spread
-
     d = load(spark, sf_dir, "documents")
-    # spread + explode_outer (r6 discipline): the single-row-group scan
-    # plus explode's inferred size() filter otherwise evaluates the
-    # 4-gram lambda per consumer on ONE task (2.1 -> 0.9 s at sf0.1)
+    # spread scan + explode_outer (r6 discipline): the single-row-group
+    # scan plus explode's inferred size() filter otherwise evaluates
+    # the 4-gram lambda per consumer on ONE task (2.1 -> 0.9 s at
+    # sf0.1); the left join back stays on the plain scan
     # tokenizer hoisted to its own projection (longdoc probe r9):
     # split() as the lambda's array argument re-evaluates per element
     sh = ngram_explode(
-        spread(d).select("doc_id", F.split("text", " ").alias("toks")),
+        load(spark, sf_dir, "documents", spread=True).select(
+            "doc_id", F.split("text", " ").alias("toks")
+        ),
         "toks",
         _DECON_N,
         out_col="g",
@@ -530,13 +531,11 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles key on the bigram, so the plan is two hash exchanges
     regardless of corpus size, the q_dedup_incremental discipline at
     n-gram granularity."""
-    from ngram_analytics_spark.operators import spread
-
-    # spread + explode_outer (r6 discipline): the single-row-group scan
-    # plus explode's inferred filter otherwise evaluates the bigram
+    # spread scan + explode_outer (r6 discipline): the single-row-group
+    # scan plus explode's inferred filter otherwise evaluates the bigram
     # lambda twice on one task (ref + incoming branches)
     # tokenizer hoisted to its own projection (longdoc probe r9)
-    d = spread(load(spark, sf_dir, "documents")).select(
+    d = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     grams = F.array_distinct(ngram_col("toks", 2))
@@ -778,13 +777,15 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("first_copy"),
         )
     )
-    from ngram_analytics_spark.operators import spread
-
-    # spread + explode_outer (r6 discipline — same fix as q_decontam):
-    # two consumers each ran the 4-gram lambda on the single scan task
+    # spread scan + explode_outer (r6 discipline — same fix as
+    # q_decontam): two consumers each ran the 4-gram lambda on the
+    # single scan task. The flag branch above stays on the plain scan:
+    # moving it to the copy bought no time and raised peak RSS.
     # tokenizer hoisted (longdoc probe r9 — same fix as q_decontam)
     sh = ngram_explode(
-        spread(d).select("doc_id", F.split("text", " ").alias("toks")),
+        load(spark, sf_dir, "documents", spread=True).select(
+            "doc_id", F.split("text", " ").alias("toks")
+        ),
         "toks",
         _DECON_N,
         out_col="g",
@@ -1134,13 +1135,11 @@ def q_sketch_bloom_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: positions are md5-chunk integers mod 4096; masks are
     32-bit (positive int64 everywhere); bit_or/bool_and are
     order-free."""
-    from ngram_analytics_spark.operators import spread
-
-    # spread + explode_outer (r6 discipline): the documents scan is one
-    # row group and plain explode's inferred filter would evaluate the
-    # 4-gram lambda below the exchange on that single task
+    # spread scan + explode_outer (r6 discipline): the documents scan
+    # is one row group and plain explode's inferred filter would
+    # evaluate the 4-gram lambda on that single task
     # tokenizer hoisted to its own projection (longdoc probe r9)
-    d = spread(load(spark, sf_dir, "documents")).select(
+    d = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     grams = F.array_distinct(ngram_col("toks", _BLOOM_N))
@@ -1278,10 +1277,8 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: integer counts only; ties in the top-50 break on the
     pair string (both engines compare UTF-8 binary here: pairs are
     drawn from the synthetic corpus' ASCII token alphabet)."""
-    from ngram_analytics_spark.operators import spread
-
     toks = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select(F.explode_outer(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok").isNotNull() & (F.col("tok") != ""))
     )
@@ -1445,8 +1442,6 @@ def q_text_cloze(spark: SparkSession, sf_dir: str) -> DataFrame:
     The position lambda indexes `sequence(1, n_tokens)`; split() never
     returns an empty array (even '' tokenizes to ['']) so the
     sequence(1, 0) descending hazard cannot arise here."""
-    from ngram_analytics_spark.operators import spread
-
     # tokenizer hoisted to its own projection (longdoc probe r9:
     # 25.9x at equal token mass): element_at(split(text), i) in the
     # transform lambdas re-ran the split once per ELEMENT; as a
@@ -1477,7 +1472,7 @@ def q_text_cloze(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL contract (tools/null_probe.py): NULL text = nothing to
     # corrupt — filtered on BOTH engines.
     return (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .filter(F.col("text").isNotNull())
         .select("doc_id", F.split("text", " ").alias("toks"))
         .select(
@@ -1629,10 +1624,8 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cnt * occ / cnt * len sums are bounded by total corpus
     CHARACTERS — int64 holds to 9.2e18 chars (~9.2 EB of text), 5
     orders past the design point."""
-    from ngram_analytics_spark.operators import spread
-
     toks = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select(F.explode_outer(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok").isNotNull() & (F.col("tok") != ""))
     )
@@ -1756,10 +1749,8 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     (pair, n) argmax frame merged in round r. Every frame is
     eager-localCheckpointed (the gd_loop unroll discipline: each
     round's vocab is referenced twice downstream)."""
-    from ngram_analytics_spark.operators import spread
-
     toks = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select(F.explode_outer(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok").isNotNull() & (F.col("tok") != ""))
     )
@@ -2006,15 +1997,13 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence is the property-pinned exact-greedy one. Headroom (r11
     tick-sum audit): cnt * n_syms / cnt * len sums are bounded by
     total corpus characters — int64-safe to ~9.2 EB of text."""
-    from ngram_analytics_spark.operators import spread
-
     vocabs, _tops = _bpe_train(spark, sf_dir)
     vs = vocabs[-1].select(
         "tok",
         F.size(F.expr(_BPE_SYMS_EXPR)).cast("long").alias("n_syms"),
     )
     lt = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select(
             "lang", F.explode_outer(F.split("text", " ")).alias("tok")
         )

@@ -28,7 +28,6 @@ from ngram_analytics_spark.functions.deterministic import (
     round4det,
     dsum_fixed,
 )
-from ngram_analytics_spark.operators import spread
 from ngram_analytics_spark.registry import QueryRegistry
 
 REG = QueryRegistry()
@@ -90,7 +89,7 @@ def q_text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     while DuckDB's skips NULLs, the one concat-semantics divergence
     the probe caught; the scrubber still scans the planted header of
     a body-less doc."""
-    p = spread(load(spark, sf_dir, "documents")).select(
+    p = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id",
         F.concat(
             F.col("source"),
@@ -153,7 +152,7 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice happens on the exploded row, so Tungsten never materializes
     more than one (doc, start) pair per output chunk. At 100 TB this
     is scan-stage work: no shuffle, no state."""
-    t = spread(load(spark, sf_dir, "documents")).select(
+    t = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     s = t.select(
@@ -215,7 +214,7 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined aggregations, no Python. Headroom (r11 tick-sum
     audit): the summed tick term is <= 1e6 * log2(c) per distinct
     token — int64-safe past 1e11 distinct tokens per doc."""
-    w = spread(load(spark, sf_dir, "documents")).select(
+    w = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     )
     c = w.groupBy("doc_id", "w").agg(F.count("*").alias("c"))
@@ -458,7 +457,7 @@ def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     document size; the frequency table joins back on the same hash key
     (one shuffle, co-partitioned), then one per-doc agg. Same shape as
     the certified q_boilerplate at a coarser, hashed granularity."""
-    t = spread(load(spark, sf_dir, "documents")).select(
+    t = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     s = t.select(
@@ -576,14 +575,12 @@ def q_fn_xpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the parse-once `from_xml` struct path measures ~1 s (the
     q_fn_json2 json_tuple lesson, XML edition). The struct therefore
     carries the scalar fields and a single xpath() node-set call
-    remains to exercise that accessor family. spread() (r15): the
+    remains to exercise that accessor family. Spread load (r15): the
     per-row XML build+parse otherwise runs entirely on the single
     scan task of the one-split local file (2.4 s of the 2.6 s wall
-    at sf0.1, in the stage record of telemetry.run_query); no-op on
-    many-split inputs, per-row values unchanged."""
-    from ngram_analytics_spark.operators import spread
-
-    p = spread(load(spark, sf_dir, "part"))
+    at sf0.1, in the stage record of telemetry.run_query); per-row
+    values unchanged."""
+    p = load(spark, sf_dir, "part", spread=True)
     xml = F.concat(
         F.lit('<part key="'),
         F.col("p_partkey"),
@@ -1903,11 +1900,11 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = explicit-ASCII regex (the unicode contract); '…' is one
     code point on both engines.
 
-    Plan: ONE scan (spread() — per-row array kernels off the
+    Plan: ONE spread scan (per-row array kernels off the
     single-file scan task, the q_filter_reasons discipline), all
     rules scan-stage expressions, ONE map-side-combined groupBy to
     |sources| rows."""
-    d = spread(load(spark, sf_dir, "documents"))
+    d = load(spark, sf_dir, "documents", spread=True)
     toks = F.split("text", " ")
     lines = F.split("text", "\n")
     nw = F.size(toks)

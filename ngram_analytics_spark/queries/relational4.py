@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ngram_analytics_spark.catalog import load, register_views, scratch
+from ngram_analytics_spark.catalog import load, publish, register_views, scratch
 from ngram_analytics_spark.functions.deterministic import (
     oracle_dsum,
     oracle_round_det,
@@ -316,18 +316,14 @@ def _partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     The directory layout IS the index: any later reader that filters on
     o_orderpriority prunes whole directories before reading a byte of
     data."""
-    import os
-
     from ngram_analytics_spark.sources import write
 
-    path = scratch("orders_by_prio", sf_dir, "orders")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write(
-            load(spark, sf_dir, "orders"),
-            path,
-            partition_by=["o_orderpriority"],
-        )
-    return path
+    return publish(
+        scratch("orders_by_prio", sf_dir, "orders"),
+        lambda tmp: write(
+            load(spark, sf_dir, "orders"), tmp, partition_by=["o_orderpriority"]
+        ),
+    )
 
 
 @REG.register(

@@ -653,11 +653,10 @@ def q_fn_crypto(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip must be the identity, the wrong-key probe must be NULL,
     and the digest must match DuckDB's sha256. All JVM-side built-ins
     (aes_encrypt / try_aes_decrypt), zero Python."""
-    from ngram_analytics_spark.operators import spread
-
-    # single-row-group documents scan + four AES passes per row: spread
-    # so the crypto kernels run plan-wide (the q_dedup_jaccard discipline)
-    d = spread(load(spark, sf_dir, "documents")).select("doc_id", "text")
+    # single-row-group documents scan + four AES passes per row: the
+    # spread load runs the crypto kernels plan-wide (the
+    # q_dedup_jaccard discipline)
+    d = load(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     return d.select(
         "doc_id",
         F.expr(

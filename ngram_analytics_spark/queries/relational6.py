@@ -844,16 +844,13 @@ def q_fn_map2(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (the arithmetic oracle renders constants where the Spark
     lambdas propagate NULL).
 
-    spread() (r15): the map HOFs are interpreted, and the single-
+    Spread load (r15): the map HOFs are interpreted, and the single-
     row-group local file ran all of them on ONE scan task (2.8 s of
     the 3.2 s wall at sf0.1, in the stage record of
-    telemetry.run_query); the narrow round-robin
-    exchange is a no-op on any many-split input and the projection
-    is per-row, so values are unchanged."""
-    from ngram_analytics_spark.operators import spread
-
-    e = spread(
-        load(spark, sf_dir, "events")
+    telemetry.run_query); the projection is per-row, so values are
+    unchanged."""
+    e = (
+        load(spark, sf_dir, "events", spread=True)
         .filter(F.col("props").isNotNull())
         .select("event_id", "props")
     )

@@ -597,10 +597,8 @@ def q_sample_negative(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain, per-row weight arithmetic, a 1-row totals broadcast, and
     TakeOrdered(20). Nothing but the explode scales with the corpus;
     the table is vocab-bounded."""
-    from ngram_analytics_spark.operators import spread
-
     toks = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select(F.explode_outer(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok").isNotNull() & (F.col("tok") != ""))
     )
@@ -915,14 +913,11 @@ def q_sample_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side, no shuffle to explode), ONE map-side-combined groupBy
     to |type| x {b} replicate cells, then a |type|-domain rollup.
     At 100 TB the explode multiplies the SCAN, not the shuffle:
-    aggregate state is |type| x {b} integers. spread() (r15) keeps
-    the x{b} md5 work plan-wide when the local file scans as one
-    split (the stage record of telemetry.run_query: a single task
-    carried 1.7 s of the 2.4 s wall
-    at sf0.1) — a no-op on any many-split input."""
-    from ngram_analytics_spark.operators import spread
-
-    e = spread(load(spark, sf_dir, "events"))
+    aggregate state is |type| x {b} integers. The spread load (r15)
+    keeps the x{b} md5 work plan-wide when the local file scans as
+    one split (the stage record of telemetry.run_query: a single task
+    carried 1.7 s of the 2.4 s wall at sf0.1)."""
+    e = load(spark, sf_dir, "events", spread=True)
     base = e.select(
         "event_type",
         "event_id",

@@ -24,7 +24,6 @@ from ngram_analytics_spark.functions.deterministic import (
     oracle_round4det,
     round4det,
 )
-from ngram_analytics_spark.operators import spread
 from ngram_analytics_spark.operators.ngram import (
     ngram_col,
     ngram_explode,
@@ -39,30 +38,21 @@ TOKENS = "string_split(text, ' ')"  # DuckDB-side tokenizer
 
 
 def tokenized_docs(
-    spark: SparkSession, sf_dir: str, *, spread_scan: bool = False
+    spark: SparkSession, sf_dir: str, *, spread: bool = False
 ) -> DataFrame:
-    """``documents`` plus ``tokens``, the whitespace split of ``text``.
-
-    ``spread_scan`` puts ``spread()`` between the scan and the
-    tokenizer, so its round-robin exchange carries the text rather
-    than the token arrays built from it (less than half the bytes on
-    the perfbench corpus) and the split runs on the spread tasks."""
-    docs = load(spark, sf_dir, "documents")
-    if spread_scan:
-        docs = spread(docs)
+    """``documents`` plus ``tokens``, the whitespace split of ``text``;
+    ``spread`` is :func:`catalog.load`'s."""
+    docs = load(spark, sf_dir, "documents", spread=spread)
     return docs.withColumn("tokens", F.split(F.col("text"), " "))
 
 
 def _exploded_ngrams(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    # scan -> spread -> split -> explode INDEX sequence -> concat after
-    # the explode. spread() is the single-split mitigation (r6): the
-    # testdata file is one row group, and the explode pins the per-row
-    # work below any exchange (sf1: bigram 2.9 -> 1.6 s, topk 3.6 ->
-    # 1.7 s). It repartitions the scanned (doc_id, text) and the split
-    # runs after the exchange: the token arrays are more than twice
-    # the bytes of the text they come from. On a many-split 100 TB
-    # input spread() is a no-op (input partitions >= cores) and the
-    # plan is shuffle-free.
+    # spread scan -> split -> explode INDEX sequence -> concat after
+    # the explode. The spread load is the single-split mitigation
+    # (r6): the testdata file is one row group, and the explode pins
+    # the per-row work to the scan's tasks (sf1: bigram 2.9 -> 1.6 s,
+    # topk 3.6 -> 1.7 s). The catalog serves it as a cores-wide scan,
+    # so the plan is shuffle-free up to the caller's own exchanges.
     #
     # r14 (guide §1.2 per-task work): exploding the gram STRINGS built
     # by the interpreted transform lambda (ngram_col) spent the stage
@@ -73,7 +63,7 @@ def _exploded_ngrams(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     # kernel. The array-valued ngram_col keeps its own (also sped-up)
     # spelling for array consumers.
     return ngram_explode(
-        tokenized_docs(spark, sf_dir, spread_scan=True).select(
+        tokenized_docs(spark, sf_dir, spread=True).select(
             "doc_id", "tokens"
         ),
         "tokens",
@@ -393,8 +383,8 @@ def q_text_fingerprint_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint count (every w-window's min hash — the statistic a
     fingerprint index would store per document).
 
-    Plan: scan -> spread (single-row-group testdata; no-op on a
-    many-split 100 TB input) -> ONE per-row projection computing the
+    Plan: spread scan (single-row-group testdata; the plain scan on
+    a many-split 100 TB input) -> ONE per-row projection computing the
     hash array (CollapseProject keeps it single-evaluation: transform()
     is non-cheap, so the 4 consumers below reference the materialized
     column) -> per-row array folds. Zero shuffles, zero joins; the
@@ -415,7 +405,7 @@ def q_text_fingerprint_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # greatest() clamp into a phantom [NULL] shingle, and the two
     # engines disagree on its winnow count).
     d = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .filter(F.col("text").isNotNull())
         .select("doc_id", F.split(F.lower("text"), "").alias("_lc"))
         .withColumn(
@@ -491,13 +481,11 @@ def q_ngram_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     (longdoc probe r9: 66.2x at equal token mass); slice() on the
     pre-split array indexes directly — O(5) per position. chars is
     referenced twice (sequence bound + lambda) so CollapseProject
-    keeps it materialized. spread() parallelizes the kernel across
-    cores on few-split inputs (r10 adjudication: the single-row-group
-    bench file ran the whole lambda on ONE task at 4% cpu — 14.5 ->
-    ~2 s at sf1; a many-split 100 TB input makes it a no-op)."""
-    from ngram_analytics_spark.operators import spread
-
-    d = spread(load(spark, sf_dir, "documents")).select(
+    keeps it materialized. The spread load parallelizes the kernel
+    across cores on few-split inputs (r10 adjudication: the
+    single-row-group bench file ran the whole lambda on ONE task at
+    4% cpu — 14.5 -> ~2 s at sf1)."""
+    d = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text", F.split("text", "").alias("chars")
     )
     shingles = F.when(
@@ -745,7 +733,7 @@ def q_text_tfidf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python anywhere."""
     from pyspark.sql.window import Window as W
 
-    w = spread(load(spark, sf_dir, "documents")).select(
+    w = load(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
     )
     c = w.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
@@ -1165,7 +1153,7 @@ def q_text_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: integer counts; unordered pairs canonicalized with
     least/greatest; ties break on the pair strings (ASCII corpus)."""
-    d = load(spark, sf_dir, "documents")
+    d = load(spark, sf_dir, "documents", spread=True)
     toks = F.split(F.lower("text"), " ")
     # sequence(1, n) is DESCENDING for n=0 (memory: q_bpe_pair_counts
     # lesson) — the outer sequence(1, size-1) needs size >= 2; the
@@ -1188,8 +1176,7 @@ def q_text_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pairs = (
-        spread(d)
-        .select(toks.alias("toks"))
+        d.select(toks.alias("toks"))
         .filter(F.size("toks") >= 2)
         .select(F.explode_outer(lattice).alias("pr"))
         .filter(F.col("pr").isNotNull())
@@ -1389,7 +1376,7 @@ def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant ~O(10), not a count), int64-safe to ~9e17 tokens —
     far past 100 TB, no 128-bit widening needed."""
     v = (
-        spread(load(spark, sf_dir, "documents"))
+        load(spark, sf_dir, "documents", spread=True)
         .select(
             "lang", F.explode_outer(F.split("text", " ")).alias("tok")
         )
@@ -1812,12 +1799,11 @@ def q_filter_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the exact-rational gate comparisons shared with the
     certified filter query.
 
-    Plan: ONE scan (spread() — the per-row array kernels otherwise
-    run on the single-row-group scan task: 2.5x at sf1 without it,
-    the q_dedup_jaccard discipline), per-row scan-stage gate
-    expressions, ONE map-side-combined groupBy to <= |sources| x 8
-    rows."""
-    df = tokenized_docs(spark, sf_dir, spread_scan=True)
+    Plan: ONE spread scan (the per-row array kernels otherwise run on
+    the single-row-group scan task: 2.5x at sf1 without it, the
+    q_dedup_jaccard discipline), per-row scan-stage gate expressions,
+    ONE map-side-combined groupBy to <= |sources| x 8 rows."""
+    df = tokenized_docs(spark, sf_dir, spread=True)
     n_tok = F.size("tokens")
     uniq_ratio = F.size(F.array_distinct("tokens")).cast("double") / n_tok
     sw = F.array(*[F.lit(s) for s in _STOPWORDS])

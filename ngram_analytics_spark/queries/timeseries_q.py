@@ -1848,8 +1848,8 @@ def q_stream_live_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = S.read_documents_stream(spark, sf_dir)
     # the file source hands availableNow batches over the file's few
     # splits; an explicit stateless repartition spreads the md5-heavy
-    # signature projection across cores (streaming frames cannot use
-    # spread(), which probes rdd partitions) — r10 adjudication: 31.2
+    # signature projection across cores (a stream reads the staged
+    # files, not the catalog's spread copy) — r10 adjudication: 31.2
     # -> ~4 s at sf1, 5% -> saturated
     d = (
         docs.repartition(spark.sparkContext.defaultParallelism)
@@ -2049,8 +2049,8 @@ def q_stream_live_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = S.read_documents_stream(spark, sf_dir)
     # stateless repartition spreads the per-row lattice across cores
-    # (the q_stream_live_minhash adjudication; spread() can't probe a
-    # streaming frame's rdd)
+    # (the q_stream_live_minhash adjudication; a stream reads the
+    # staged files, not the catalog's spread copy)
     from ngram_analytics_spark.operators.ngram import ngram_explode
 
     g = (

@@ -194,14 +194,11 @@ def q_udtf_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield (i, *tokens[i : i + n])
 
     spark.udtf.register("poly_ngram_udtf", udtf(PolyNGram))
-    # spread() (r15): eval() is per-row Python, and the single-split
-    # local file otherwise runs the whole LATERAL expansion on ONE
-    # task (0.47 s of the 0.70 s wall in the stage record of
-    # telemetry.run_query); no-op on many-split inputs, per-row
-    # values unchanged.
-    from ngram_analytics_spark.operators import spread
-
-    spread(load(spark, sf_dir, "documents")).createOrReplaceTempView(
+    # spread load (r15): eval() is per-row Python, and the
+    # single-split local file otherwise runs the whole LATERAL
+    # expansion on ONE task (0.47 s of the 0.70 s wall in the stage
+    # record of telemetry.run_query); per-row values unchanged.
+    load(spark, sf_dir, "documents", spread=True).createOrReplaceTempView(
         "documents_poly"
     )
     return spark.sql(

@@ -1,10 +1,13 @@
-"""Catalog: schemas resolved once per file identity, session confs set
-once per session. (Both ``events.ts`` layouts, batch and stream:
+"""Catalog: schemas and spread layouts resolved once per file
+identity, derived copies published whole, session confs set once per
+session. (Both ``events.ts`` layouts, batch and stream:
 tests/test_streaming.py.)"""
 
 from __future__ import annotations
 
 import os
+import shutil
+from collections import Counter
 
 import pytest
 
@@ -122,6 +125,108 @@ def test_pin_keeps_batch_partitions_and_halves_stream_state(spark, tmp_path):
     assert {op["numShufflePartitions"] for op in ops} == {want}
 
 
+def _rows(df) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("uri", [False, True])
+def test_spread_load_is_cores_wide_with_the_same_rows(spark, uri):
+    """The single-row-group documents file scans as one split; its
+    spread load scans as at least ``defaultParallelism`` and holds the
+    same rows: the catalog's copy, or a repartition of a table it
+    cannot stat (a URI)."""
+    sf = f"file://{SF_SMOKE}" if uri else SF_SMOKE
+    plain = catalog.load(spark, sf, "documents")
+    wide = catalog.load(spark, sf, "documents", spread=True)
+    assert plain.rdd.getNumPartitions() == 1
+    assert wide.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    assert wide.schema == plain.schema
+    assert _rows(wide) == _rows(plain)
+
+
+def _copy_documents(sf) -> str:
+    """A corpus at ``sf`` holding a copy of the smoke ``documents``,
+    under a file identity no load has seen."""
+    os.makedirs(sf, exist_ok=True)
+    shutil.copy(catalog.table_path(SF_SMOKE, "documents"),
+                catalog.table_path(str(sf), "documents"))
+    return str(sf)
+
+
+def test_second_spread_load_submits_no_job(spark, tmp_path):
+    sf = _copy_documents(tmp_path)
+
+    def spread_load():
+        catalog.load(spark, sf, "documents", spread=True)
+
+    cold = _jobs_in(spark, "spread-cold", spread_load)
+    warm = _jobs_in(spark, "spread-warm", spread_load)
+    assert cold >= 1, "the first spread load writes the copy"
+    assert warm == 0
+
+
+def test_spread_load_follows_a_rewritten_table(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    sf = str(tmp_path)
+    path = catalog.table_path(sf, "documents")
+    docs = catalog.load(spark, SF_SMOKE, "documents")
+    S.write(docs, path)
+    assert _rows(catalog.load(spark, sf, "documents", spread=True)) == _rows(docs)
+    fewer = docs.filter(F.col("doc_id") % 3 == 0)
+    S.write(fewer, path)
+    assert _rows(catalog.load(spark, sf, "documents", spread=True)) == _rows(fewer)
+
+
+def test_concurrent_first_spread_loads_publish_one_copy(spark, scratch_tmp, tmp_path):
+    """Two threads that make the same copy at once both read the whole
+    copy, and one directory is left, with no temporary ones."""
+    import threading
+
+    sf = _copy_documents(tmp_path / "sf")
+    barrier = threading.Barrier(2)
+    got: list = [None, None]
+
+    def first_load(i):
+        barrier.wait()
+        got[i] = _rows(catalog.load(spark, sf, "documents", spread=True))
+
+    threads = [threading.Thread(target=first_load, args=(i,)) for i in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert got[0] is not None and got[0] == got[1]
+    assert got[0] == _rows(catalog.load(spark, SF_SMOKE, "documents"))
+    root = scratch_tmp / f"nas-scratch-{os.getpid()}"
+    (entry,) = os.listdir(root)
+    assert entry.startswith("spread") and ".tmp-" not in entry, entry
+
+
+def test_publish_loser_keeps_the_winner_copy(tmp_path):
+    """A caller whose rename finds the copy published meanwhile removes
+    its own directory and returns the published one untouched."""
+    dest = tmp_path / "copy"
+
+    def fill(text):
+        def write(tmp):
+            os.makedirs(tmp)
+            with open(os.path.join(tmp, "part"), "w") as fh:
+                fh.write(text)
+        return write
+
+    def loser(tmp):
+        fill("loser")(tmp)
+        catalog.publish(str(dest), fill("winner"))
+
+    assert catalog.publish(str(dest), loser) == str(dest)
+    assert (dest / "part").read_text() == "winner"
+    assert os.listdir(tmp_path) == ["copy"]
+    # a published copy is not written again
+    assert catalog.publish(str(dest), fill("again")) == str(dest)
+    assert (dest / "part").read_text() == "winner"
+
+
 @pytest.fixture
 def scratch_tmp(monkeypatch, tmp_path):
     """An empty temp dir that ``catalog.scratch`` has not set up yet."""
@@ -143,8 +248,6 @@ def test_scratch_root_is_the_process_own_under_tempdir(scratch_tmp):
 
 
 def test_scratch_path_moves_only_with_its_tables(scratch_tmp, tmp_path):
-    import shutil
-
     sf = tmp_path / "sf0.001"
     sf.mkdir()
     for t in ("orders", "lineitem"):
@@ -187,8 +290,6 @@ def test_derived_copies_follow_rewritten_tables(spark, registry, tmp_path):
     """The partitioned and bucketed copies of orders and lineitem are
     rebuilt when those tables are rewritten in place: every key that
     reads a copy matches its oracle before and after the rewrite."""
-    import shutil
-
     import duckdb
 
     from ngram_analytics_spark.testing import compare, duck_result, spark_result

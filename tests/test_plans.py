@@ -47,18 +47,16 @@ def test_group_agg_has_partial_phase(spark):
 
 
 def test_ngram_pipeline_single_shuffle(spark):
-    """scan -> spread -> transform -> explode -> agg -> topk: the
-    aggregation exchange plus (on single-split local inputs only) the
-    narrow spread() round-robin — spread is a no-op when the scan
-    already has >= core-count partitions, so the 100 TB plan keeps
-    exactly one shuffle."""
+    """spread scan -> transform -> explode -> agg -> topk: the
+    aggregation exchange is the one shuffle. The catalog serves the
+    single-split local input as its cores-wide copy, so no round-robin
+    exchange is left, the same plan a many-split 100 TB input gets."""
     df = _q("q_ngram_topk")(spark, SF_SMOKE)
-    assert P.num_exchanges(df) <= 2, P.physical_plan(df)
+    assert P.num_exchanges(df) <= 1, P.physical_plan(df)
 
 
 def test_ngram_transform_no_shuffle(spark):
-    """The per-row transform itself must add no shuffle beyond the
-    single-split spread() mitigation (see above)."""
+    """The per-row transform itself must add no shuffle."""
     df = _q("q_ngram_bigram")(spark, SF_SMOKE)
     assert P.num_exchanges(df) <= 1, P.physical_plan(df)
 
@@ -69,26 +67,29 @@ def _shuffles(df) -> list[tuple[str, list[str]]]:
 
 
 def test_minhash_kernel_shuffles_each_input_once(smoke_df):
-    """The certified MinHash kernel shuffles the documents once and its
-    signature table once: the signature side and the recheck's shingle
-    side share one round-robin exchange, and the intra- and
-    cross-group branches share one signature-keyed aggregate."""
+    """The certified MinHash kernel shuffles its signature table once:
+    the intra- and cross-group branches share one signature-keyed
+    aggregate. The documents are not shuffled to spread them: the
+    signature and shingle sides read the catalog's cores-wide copy."""
     parts = [p for p, _ in _shuffles(smoke_df("q_dedup_minhash_exact"))]
     sig = "hashpartitioning(" + ", ".join(f"m{i}" for i in range(8)) + ","
-    assert sum(p.startswith("RoundRobinPartitioning") for p in parts) == 1, parts
+    assert not any(p.startswith("RoundRobinPartitioning") for p in parts), parts
     assert sum(p.startswith(sig) for p in parts) == 1, parts
 
 
 @pytest.mark.parametrize(
-    "key", ["q_ngram_topk", "q_ngram_bigram", "q_ngram_trigram", "q_filter_reasons"]
+    "key",
+    [
+        "q_ngram_topk", "q_ngram_bigram", "q_ngram_trigram", "q_filter_reasons",
+        "q_pipeline_e2e", "q_sim_knn",
+    ],
 )
 def test_spread_carries_text_not_tokens(smoke_df, key):
-    """spread() repartitions the scanned text; the tokenizer runs after
-    the exchange, so no token array crosses it."""
+    """The spread keys read the catalog's cores-wide copy of the scanned
+    table: no round-robin exchange is left, so neither the text nor
+    the token arrays built from it cross one."""
     spread = [t for p, t in _shuffles(smoke_df(key)) if p.startswith("RoundRobin")]
-    assert spread, key
-    for types in spread:
-        assert not any(t.startswith("array") for t in types), (key, types)
+    assert not spread, (key, spread)
 
 
 def test_range_binned_join_avoids_nested_loop(spark):
@@ -855,8 +856,8 @@ def test_text_cooc_plan_is_join_free(spark):
     df = _q("q_text_cooc")(spark, SF_SMOKE)
     plan = P.physical_plan(df)
     assert "Join" not in plan, plan
-    # spread() round-robin + the pair-agg exchange only
-    assert P.num_exchanges(df) <= 2, plan
+    # the pair-agg exchange only (the scan is the spread copy)
+    assert P.num_exchanges(df) <= 1, plan
 
 
 def test_text_cooc_bounded_work_on_long_document(spark, tmp_path):

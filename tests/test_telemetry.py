@@ -12,15 +12,17 @@ from tests.conftest import SF_SMOKE
 
 
 def test_scan_key_fires_no_construction_job(spark):
-    # the first load of a table infers its schema, in a job
-    telemetry.run_query(spark, "q_filter_pred", SF_SMOKE)
-    rec = telemetry.run_query(spark, "q_filter_pred", SF_SMOKE)
-    assert rec["construct_jobs"] == 0
-    assert rec["construct_jobs_s"] == 0
-    assert rec["stages"]["construct"] == []
-    assert rec["exec_jobs"] >= 1
-    assert sum(s["tasks"] for s in rec["stages"]["exec"]) >= 1
-    assert rec["streams"] == []
+    # the first load of a table infers its schema, in a job, and the
+    # first spread load writes the table's cores-wide copy
+    for key in ("q_filter_pred", "q_ngram_topk"):
+        telemetry.run_query(spark, key, SF_SMOKE)
+        rec = telemetry.run_query(spark, key, SF_SMOKE)
+        assert rec["construct_jobs"] == 0, key
+        assert rec["construct_jobs_s"] == 0, key
+        assert rec["stages"]["construct"] == [], key
+        assert rec["exec_jobs"] >= 1, key
+        assert sum(s["tasks"] for s in rec["stages"]["exec"]) >= 1, key
+        assert rec["streams"] == [], key
 
 
 def test_checkpointing_key_fires_construction_jobs(spark):
